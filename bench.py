@@ -10,12 +10,17 @@ bounded tail of stdout (round 3's 2.5 KB single line -> "parsed": null).
 
 Each query is executed to completion via .collect() (results are small —
 aggregations / bounded top-k / per-doc stats).
+
+``python bench.py q1 q2 ...`` times only the named headline queries with
+the same warm-up, passes and calibration, and leaves BENCH_DETAIL.json
+alone — the fast loop for re-measuring a per-query change.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import sys
 import time
 
 from nbi_oedi_etl_spark import get_spark, workload
@@ -351,6 +356,11 @@ def _host_calibration() -> float:
 
 
 def main() -> None:
+    subset = sys.argv[1:]
+    names = subset or HEADLINE
+    unknown = sorted(set(names) - set(HEADLINE))
+    if unknown:
+        raise SystemExit(f"unknown headline queries: {unknown}")
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
     # No console progress bars: their \r-redraw fragments interleave with the
     # final JSON line in captured output and can defeat last-line parsing.
@@ -381,7 +391,7 @@ def main() -> None:
     # through (observed: a 0.9 s query reported at 17 s). With ~minutes
     # between a query's samples, a burst hits at most one of them and the
     # median filters it. Total work is unchanged.
-    sampled: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    sampled: dict[str, list[float]] = {name: [] for name in names}
     # One calibration sample per pass, reported as the MEDIAN: steal
     # varies WITHIN a run, and a single end-of-run sample can claim a
     # quiet host for a run that spent two passes degraded (observed:
@@ -393,7 +403,7 @@ def main() -> None:
     for _ in range(3):
         calibs.append(_host_calibration())
         calibs_mt.append(_host_calibration_mt())
-        for name in HEADLINE:
+        for name in names:
             t0 = time.perf_counter()
             qs[name](spark, SF_DIR).collect()
             sampled[name].append(time.perf_counter() - t0)
@@ -438,13 +448,14 @@ def main() -> None:
     # Per-query detail goes to a file + an early stdout line; the FINAL stdout
     # line is a short summary. Round 3's single ~2.5 KB JSON line
     # outgrew the driver's captured output tail -> BENCH_r03 "parsed": null.
-    with open(os.path.join(os.path.dirname(__file__), "BENCH_DETAIL.json"), "w") as f:
-        json.dump(detail, f, indent=1)
+    if not subset:
+        with open(os.path.join(os.path.dirname(__file__), "BENCH_DETAIL.json"), "w") as f:
+            json.dump(detail, f, indent=1)
     # r15 (VERDICT r14 issue 1 / task 3): per-query medians in
     # driver-parsable form. (a) One small JSON line per query, before
     # the detail/summary lines, for any line-oriented reader of the full
     # stdout; (b) a size-bounded "queries" map on the FINAL line (below).
-    for name in HEADLINE:
+    for name in names:
         print(json.dumps({"query": name, "median_s": times[name]}))
     print(json.dumps(detail), flush=True)
     summary = {

@@ -35,10 +35,13 @@ of the §2.12 training-data-pipeline extension (SURVEY.md), scale path.
 from __future__ import annotations
 
 import json
+from collections.abc import Mapping
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nbi_oedi_etl_spark.memo import Memo, session_key, sidecar_status
 from nbi_oedi_etl_spark.operators.dedup import band_rows
 
 #: Underscore-prefixed: Spark's recursive listing skips it, so the main
@@ -51,6 +54,12 @@ _META_FILE = "_banded_meta.json"
 def _write_meta(
     spark: SparkSession, dest: str, meta: dict, fname: str = _META_FILE
 ) -> None:
+    """Write a layout sidecar — the only sidecar writer for the banded and
+    IVF layouts — and drop the layout's ``_LAYOUT_MEMO`` entries: an
+    overwrite landing in the same mtime tick with the same size (S3
+    ``LastModified`` has one-second resolution) keeps the status key, so
+    the key alone cannot see it. An overwrite by ANOTHER process within
+    one tick is still unseen."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(f"{dest}/{fname}")
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -59,58 +68,56 @@ def _write_meta(
         out.write(bytearray(json.dumps(meta).encode("utf-8")))
     finally:
         out.close()
+    _LAYOUT_MEMO.drop(lambda key: key[-1][0] == dest)
 
 
-#: memoized sidecar dicts keyed (path, fname, mtime, size): a layout's
-#: sidecar is written once at build time — appends never touch it, and
-#: an overwrite rotates the mtime key. Metadata only. FIFO-bounded for
-#: long-lived sweep processes. CDC streams read 2-3 sidecars per
-#: micro-batch (~0.05 s each through the py4j FS bridge, r15 phase
-#: timers); the getFileStatus probe that keys the memo is ~1 ms.
-_META_MEMO: dict = {}
-_META_MEMO_MAX = 64
+#: Values derived from a layout's sidecars — the sidecar dicts, the IVF
+#: layout's scan schema and the IVF-PQ expression trees — keyed (tag,
+#: sidecar status), with the applicationId prepended for Column trees.
+#: A sidecar is written once at build time (appends never touch it) and
+#: an overwrite rotates its status; ``_write_meta`` also drops the
+#: layout's entries. CDC streams read 2-3 sidecars per micro-batch
+#: (~0.05 s each through the py4j FS bridge, r15 phase timers) and
+#: re-built the ADC/encode Column trees (~0.3-0.4 s per batch); the
+#: status probe that keys them is ~1 ms.
+_LAYOUT_MEMO = Memo(128)
 
 
-def _meta_status_key(spark: SparkSession, path: str, fname: str) -> tuple:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{fname}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    st = fs.getFileStatus(hpath)
-    return (path, fname, st.getModificationTime(), st.getLen())
+def _layout_key(
+    spark: SparkSession, path: str, fname: str, tag: str, per_session: bool = False
+):
+    """``_LAYOUT_MEMO`` key — None when the sidecar is unreadable."""
+    st = sidecar_status(spark, path, fname)
+    if st is None:
+        return None
+    return session_key(spark, tag, st) if per_session else (tag, st)
 
 
-def _read_meta(spark: SparkSession, path: str, fname: str = _META_FILE) -> dict:
-    """Read (memoized — see ``_META_MEMO``) a layout sidecar. The
-    returned dict is SHARED across callers: treat it as immutable."""
-    try:
-        key = _meta_status_key(spark, path, fname)
-    except Exception:
-        # missing sidecar: fall through so fs.open raises the original
-        # error shape the callers expect
-        key = None
-    if key is not None:
-        m = _META_MEMO.get(key)
-        if m is not None:
-            return m
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{fname}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(hpath)
-    try:
-        # py4j COPIES byte[] across the bridge, so a Java-side readFully
-        # into a Python bytearray never propagates back — read through
-        # commons-io (on Spark's classpath) which returns the String
-        text = jvm.org.apache.commons.io.IOUtils.toString(
-            stream, jvm.java.nio.charset.StandardCharsets.UTF_8
-        )
-    finally:
-        stream.close()
-    m = json.loads(text)
-    if key is not None:
-        _META_MEMO[key] = m
-        while len(_META_MEMO) > _META_MEMO_MAX:
-            _META_MEMO.pop(next(iter(_META_MEMO)))
-    return m
+def _read_meta(
+    spark: SparkSession, path: str, fname: str = _META_FILE
+) -> Mapping:
+    """A layout sidecar, memoized and read-only (it is shared across
+    callers). A missing sidecar raises the Hadoop FileNotFoundException
+    the callers expect."""
+
+    def read() -> Mapping:
+        jvm = spark._jvm
+        hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{fname}")
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        stream = fs.open(hpath)
+        try:
+            # py4j COPIES byte[] across the bridge, so a Java-side
+            # readFully into a Python bytearray never propagates back —
+            # read through commons-io (on Spark's classpath) which
+            # returns the String
+            text = jvm.org.apache.commons.io.IOUtils.toString(
+                stream, jvm.java.nio.charset.StandardCharsets.UTF_8
+            )
+        finally:
+            stream.close()
+        return MappingProxyType(json.loads(text))
+
+    return _LAYOUT_MEMO.get(_layout_key(spark, path, fname, "meta"), read)
 
 
 def _pcell(n_buckets: int):
@@ -178,7 +185,7 @@ def write_banded_layout(
                 raise
             existing = None  # fresh dest: append behaves like a first write
         if existing is not None:
-            existing.setdefault("family", None)  # pre-r11 sidecars
+            existing = {"family": None, **existing}  # pre-r11 sidecars
             if existing != meta:
                 raise ValueError(
                     f"append into {dest!r} with mismatched banding parameters: "

@@ -32,6 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nbi_oedi_etl_spark.operators._util import fast_lit
+from nbi_oedi_etl_spark.operators.banded_layout import (
+    _LAYOUT_MEMO,
+    _compact_partition_dirs,
+    _layout_key,
+    _read_meta,
+    _write_meta,
+)
 from nbi_oedi_etl_spark.operators.similarity import (
     _rank_topk,
     ivf_cell_udf,
@@ -69,8 +76,6 @@ def _lit_matrix(rows) -> "F.Column":
 
 
 def _write_ivf_meta(spark: SparkSession, dest: str, cent_unit: np.ndarray) -> None:
-    from nbi_oedi_etl_spark.operators.banded_layout import _write_meta
-
     _write_meta(
         spark,
         dest,
@@ -85,8 +90,6 @@ def _write_ivf_meta(spark: SparkSession, dest: str, cent_unit: np.ndarray) -> No
 
 def read_ivf_codebook(spark: SparkSession, path: str) -> np.ndarray:
     """The layout's own unit-centroid codebook from its sidecar."""
-    from nbi_oedi_etl_spark.operators.banded_layout import _read_meta
-
     m = _read_meta(spark, path, fname=_IVF_META_FILE)
     cent = np.asarray(m["codebook"], dtype=np.float64)
     if cent.shape != (m["dim"], m["n_cells"]):
@@ -95,36 +98,27 @@ def read_ivf_codebook(spark: SparkSession, path: str) -> np.ndarray:
     return cent
 
 
-#: Inferred layout schemas, keyed by (applicationId, path, sidecar
-#: mtime). Schema inference reads parquet footers on EVERY
-#: ``spark.read.parquet`` (~0.1-0.5 s per probe — the recall curves
-#: probe the same layout 4+ times and the CDC streams once per batch),
-#: but a layout's schema is fixed at write time: appends preserve it
-#: (the dim/type guards) and an overwrite rewrites ``_ivf_meta.json``,
-#: rotating the mtime key. Metadata only — never data — so bench runs
-#: still compute everything from the parquet inputs.
-_LAYOUT_SCHEMA_MEMO: dict = {}
-
-
 def _layout_scan(spark: SparkSession, path: str):
     """``spark.read`` over the layout, skipping footer schema inference
-    after the first read of a given layout (see _LAYOUT_SCHEMA_MEMO).
-    File LISTING stays eager at the returned reader's ``.parquet`` call
-    either way — the CDC probes rely on listing-before-append."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{_IVF_META_FILE}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    try:
-        mtime = fs.getFileStatus(hpath).getModificationTime()
-    except Exception:
-        return spark.read.parquet(path)  # no sidecar: plain inference
-    key = (spark.sparkContext.applicationId, path, mtime)
-    schema = _LAYOUT_SCHEMA_MEMO.get(key)
-    if schema is None:
+    (~0.1-0.5 s per probe — the recall curves probe the same layout 4+
+    times and the CDC streams once per batch) after the first read of a
+    given layout. A layout's schema is fixed at write time: appends
+    preserve it (the dim/type guards) and an overwrite rewrites
+    ``_ivf_meta.json``, so the schema is memoized in ``_LAYOUT_MEMO``
+    under that sidecar's status. File LISTING stays eager at the returned
+    reader's ``.parquet`` call either way — the CDC probes rely on
+    listing-before-append."""
+    df = None
+
+    def infer():
+        nonlocal df
         df = spark.read.parquet(path)
-        _LAYOUT_SCHEMA_MEMO[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+        return df.schema
+
+    schema = _LAYOUT_MEMO.get(
+        _layout_key(spark, path, _IVF_META_FILE, "schema"), infer
+    )
+    return df if df is not None else spark.read.schema(schema).parquet(path)
 
 
 def _assign_cells(
@@ -294,10 +288,6 @@ def compact_ivf_layout(
     """In-place per-cell compaction after CDC appends; see
     ``compact_banded_layout`` (same shared swap mechanism, probe results
     unchanged — only file packing moves)."""
-    from nbi_oedi_etl_spark.operators.banded_layout import (
-        _compact_partition_dirs,
-    )
-
     return _compact_partition_dirs(
         spark, path, "cell=", max_files_per_cell, target_file_bytes
     )
@@ -715,17 +705,14 @@ def cdc_probe_append_ivf_pq_layout(
     assigned = _local_assigned_relation(spark, rows, q_fields, cells)
     # residual + encode columns are layout-fixed too — memoized beside
     # the ADC tree (same sidecar key, "enc" tag)
-    enc_key = _layout_expr_key(spark, path, _IVF_PQ_META_FILE, "enc")
-    cached = _LAYOUT_EXPR_MEMO.get(enc_key) if enc_key is not None else None
-    if cached is None:
-        cent_lit = _lit_matrix(cent_unit.T)
-        resid_col = F.zip_with(
-            "emb", F.element_at(cent_lit, F.col("cell") + 1), lambda x, y: x - y
-        )
-        if enc_key is not None:
-            _expr_memo_put(enc_key, resid_col)
-    else:
-        resid_col = cached
+    resid_col = _LAYOUT_MEMO.get(
+        _layout_expr_key(spark, path, _IVF_PQ_META_FILE, "enc"),
+        lambda: F.zip_with(
+            "emb",
+            F.element_at(_lit_matrix(cent_unit.T), F.col("cell") + 1),
+            lambda x, y: x - y,
+        ),
+    )
     resid = assigned.withColumn("res", resid_col)
     encoded = (
         _pq_encode_codes(
@@ -780,11 +767,10 @@ def _pq_encode_codes(
     the append path cannot drift from the build path's encoding.
     ``expr_key`` (r15): memo key for the per-sub code Columns — the
     codebooks are layout-fixed, so repeated appends (CDC batches) reuse
-    one constructed tree per sub (see ``_LAYOUT_EXPR_MEMO``)."""
+    one constructed tree per sub (see ``_layout_expr_key``)."""
     from nbi_oedi_etl_spark.operators.similarity import l2_distance
 
-    code_cols = _LAYOUT_EXPR_MEMO.get(expr_key) if expr_key is not None else None
-    if code_cols is None:
+    def build() -> list:
         code_cols = []
         for s in range(pq_m):
             sub_slice = F.slice("res", s * dsub + 1, dsub)
@@ -797,8 +783,9 @@ def _pq_encode_codes(
             code_cols.append(
                 (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
             )
-        if expr_key is not None:
-            _expr_memo_put(expr_key, code_cols)
+        return code_cols
+
+    code_cols = _LAYOUT_MEMO.get(expr_key, build)
     encoded = res
     for s in range(pq_m):
         encoded = encoded.withColumn(f"code_{s}", code_cols[s])
@@ -835,7 +822,6 @@ def write_ivf_pq_layout(
     shuffles are the bounded codebook-TRAINING pass (one per-(sub, code,
     dim) aggregate over the corpus) and the per-cell write repartition.
     Returns the coarse codebook."""
-    from nbi_oedi_etl_spark.operators.banded_layout import _write_meta
     from nbi_oedi_etl_spark.operators.similarity import (
         pq_subvectors,
         pq_train_codebook,
@@ -904,8 +890,6 @@ def write_ivf_pq_layout(
 
 def read_ivf_pq_meta(spark: SparkSession, path: str) -> dict:
     """The layout's PQ sidecar: m, dsub, k and the dense codebooks."""
-    from nbi_oedi_etl_spark.operators.banded_layout import _read_meta
-
     m = _read_meta(spark, path, fname=_IVF_PQ_META_FILE)
     books = m["codebooks"]
     if len(books) != m["pq_m"]:
@@ -984,35 +968,15 @@ def probe_ivf_pq_layout(
     )
 
 
-#: memoized per-layout expression trees (the ADC reconstruction column
-#: and the PQ encode code columns), keyed (applicationId, path, fname,
-#: sidecar mtime, size). The codebook literals are FIXED once a layout
-#: is written (the sidecar contract), but the CDC streams re-built these
-#: Column trees every micro-batch — ~0.3-0.4 s/batch of driver-side
-#: construction (r15 phase timers; guide §5.4 — the driver is
-#: single-threaded Python). Pure unresolved expressions: no data, no
-#: plan state; the applicationId guards a restarted JVM.
-_LAYOUT_EXPR_MEMO: dict = {}
-_LAYOUT_EXPR_MEMO_MAX = 64
-
-
 def _layout_expr_key(spark: SparkSession, path: str, fname: str, tag: str):
-    """Memo key for expression trees derived from a layout's sidecar —
-    None when the sidecar is unreadable (callers then skip the memo)."""
-    from nbi_oedi_etl_spark.operators.banded_layout import _meta_status_key
-
-    try:
-        st = _meta_status_key(spark, path, fname)
-    except Exception:
-        return None
-    return (spark.sparkContext.applicationId, tag) + st
-
-
-def _expr_memo_put(key, val):
-    _LAYOUT_EXPR_MEMO[key] = val
-    while len(_LAYOUT_EXPR_MEMO) > _LAYOUT_EXPR_MEMO_MAX:
-        _LAYOUT_EXPR_MEMO.pop(next(iter(_LAYOUT_EXPR_MEMO)))
-    return val
+    """``_LAYOUT_MEMO`` key for a Column tree built from a layout's sidecar
+    — the ADC reconstruction column and the PQ encode columns. The
+    codebook literals are FIXED once a layout is written, but the CDC
+    streams re-built these trees every micro-batch (~0.3-0.4 s/batch of
+    driver-side construction, r15 phase timers; guide §5.4 — the driver
+    is single-threaded Python). Per applicationId: a Column is a JVM
+    reference."""
+    return _layout_key(spark, path, fname, tag, per_session=True)
 
 
 def _adc_rerank(
@@ -1035,19 +999,19 @@ def _adc_rerank(
     sidecar values)."""
     pq_m = meta["pq_m"]
     code_cols = [f"code_{s}" for s in range(pq_m)]
-    xhat = _LAYOUT_EXPR_MEMO.get(expr_key) if expr_key is not None else None
-    if xhat is None:
+
+    def build():
         books = meta["codebooks"]
         cb_lits = [_lit_matrix(books[s]) for s in range(pq_m)]
         cent_lit = _lit_matrix(cent_unit.T)
         recon = F.concat(
             *[F.element_at(cb_lits[s], F.col(f"code_{s}") + 1) for s in range(pq_m)]
         )
-        xhat = F.zip_with(
+        return F.zip_with(
             recon, F.element_at(cent_lit, F.col("cell") + 1), lambda x, y: x + y
         )
-        if expr_key is not None:
-            _expr_memo_put(expr_key, xhat)
+
+    xhat = _LAYOUT_MEMO.get(expr_key, build)
     c = scan.withColumn("emb", xhat).drop(*code_cols)
     return _rerank_candidates(c, q, k, broadcast_q=broadcast_q)
 

@@ -22,6 +22,8 @@ from collections.abc import Iterable, Mapping, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nbi_oedi_etl_spark.memo import Memo, file_key
+
 #: Tables the driver generates at /root/testdata/sf*/ (TESTDATA.md).
 TABLES = (
     "region",
@@ -47,29 +49,8 @@ TABLES = (
 #: testdata schemas ~600+ times (guide §1.2: don't compute things you
 #: throw away). The fingerprint covers the file set's (name, mtime_ns,
 #: size) — any rewrite, add, or delete rotates the key and re-infers.
-#: Session-independent by construction (pure Python StructType).
-_TABLE_SCHEMA_MEMO: dict = {}
-_TABLE_SCHEMA_MEMO_MAX = 256
-
-
-def _path_fingerprint(path: str):
-    """(name, mtime_ns, size) of the path and, for a directory-of-parts
-    table, of every visible entry — None when unstatable (caller then
-    skips the memo and lets Spark surface the original error)."""
-    import os
-
-    try:
-        st = os.stat(path)
-        fp = [("", st.st_mtime_ns, st.st_size)]
-        if os.path.isdir(path):
-            for e in sorted(os.listdir(path)):
-                if e.startswith((".", "_")):
-                    continue
-                es = os.stat(os.path.join(path, e))
-                fp.append((e, es.st_mtime_ns, es.st_size))
-        return tuple(fp)
-    except OSError:
-        return None
+#: Shared with the stream sources (``streaming.ingest.table_schema``).
+_TABLE_SCHEMA_MEMO = Memo(256)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -92,16 +73,16 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # schema read of the nanos column
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    fp = _path_fingerprint(path)
-    schema = _TABLE_SCHEMA_MEMO.get((path, fp)) if fp is not None else None
-    if schema is not None:
-        raw = spark.read.schema(schema).parquet(path)
-    else:
+    raw = None
+
+    def infer():
+        nonlocal raw
         raw = spark.read.parquet(path)
-        if fp is not None:
-            _TABLE_SCHEMA_MEMO[(path, fp)] = raw.schema
-            while len(_TABLE_SCHEMA_MEMO) > _TABLE_SCHEMA_MEMO_MAX:
-                _TABLE_SCHEMA_MEMO.pop(next(iter(_TABLE_SCHEMA_MEMO)))
+        return raw.schema
+
+    schema = _TABLE_SCHEMA_MEMO.get(file_key(path), infer)
+    if raw is None:
+        raw = spark.read.schema(schema).parquet(path)
     if name == "events":
         if dict(raw.dtypes).get("ts") == "bigint":
             raw = raw.withColumn(

@@ -28,6 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from nbi_oedi_etl_spark.memo import file_key
+from nbi_oedi_etl_spark.sources import parquet
+
 
 def scoped_streaming_session(
     spark: SparkSession, shuffle_partitions: int = 8
@@ -54,32 +57,18 @@ def scoped_streaming_session(
     return s
 
 
-#: memoized table schemas for stream sources, keyed by
-#: (sf_dir, table, mtime-of-path). Pure METADATA (a StructType — no
-#: session-bound state, valid across sessions/contexts like
-#: workload_banded._STAGED_MOD3_CACHE's files); the mtime key re-infers
-#: if anyone rewrites the path. Profiled r15: every drain paid a
-#: ~0.12 s footer-inference job for an immutable testdata schema —
-#: ~0.1 s × every streaming-spec invocation of the bench (guide §1.2
-#: "don't compute things you throw away").
-_TABLE_SCHEMA_MEMO: dict = {}
-
-
 def table_schema(spark: SparkSession, sf_dir: str, table: str):
-    """Memoized ``StructType`` of ``{sf_dir}/{table}.parquet``."""
-    import os
-
+    """``StructType`` of ``{sf_dir}/{table}.parquet``, memoized in the
+    batch reader's ``parquet._TABLE_SCHEMA_MEMO`` under the same file-set
+    key (``read_table`` and ``events_file_stream`` both set
+    ``nanosAsLong`` before reading ``events``, so their entries agree;
+    Spark 4.1 infers ``ts`` identically either way). Profiled r15: every
+    drain otherwise paid a ~0.12 s footer-inference job for an immutable
+    testdata schema."""
     path = f"{sf_dir}/{table}.parquet"
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = None
-    key = (sf_dir, table, mtime)
-    schema = _TABLE_SCHEMA_MEMO.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _TABLE_SCHEMA_MEMO[key] = schema
-    return schema
+    return parquet._TABLE_SCHEMA_MEMO.get(
+        file_key(path), lambda: spark.read.parquet(path).schema
+    )
 
 
 def read_file_stream(

@@ -20,13 +20,13 @@ Reference parity: no reference analogue (§2.12 extension, scale path).
 from __future__ import annotations
 
 import tempfile
-import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nbi_oedi_etl_spark import workload_ext as ext
+from nbi_oedi_etl_spark.memo import Memo, file_key, session_key
 from nbi_oedi_etl_spark.operators.banded_layout import (
     probe_banded_layout,
     write_banded_layout,
@@ -36,20 +36,16 @@ from nbi_oedi_etl_spark.operators.banded_layout import (
 _BANDS = 4
 
 
-#: staged mod-3 splits, keyed by (sf_dir, table, id_col). The split is a
-#: pure driver-side pyarrow derivation of an IMMUTABLE testdata file —
-#: no Spark session in the key (unlike ``ext._memo_get``'s DataFrame
-#: memos, there is no context-bound state to go stale) — so one bench /
+#: staged mod-3 splits, keyed by the source table's path, id_col and file
+#: fingerprint. The split is a pure driver-side pyarrow derivation of the
+#: table — no Spark session in the key (see ``memo``) — so one bench /
 #: driver process stages each source once instead of per stream spec
 #: (r12 bench: ``documents`` was re-staged by 3 streams and
 #: ``embeddings`` by 2 on every pass; VERDICT r12 task 2 lever).
 #: Consumers only ever READ the staged files; checkpoint dirs stay
-#: per-call, so each drain still replays all 3 files.
-_STAGED_MOD3_CACHE: dict = {}
-
-#: Serializes cache population across threads (concurrent probe runs
-#: double-staged and leaked tempdirs — benign but noisy; ADVICE r13).
-_STAGE_LOCK = threading.Lock()
+#: per-call, so each drain still replays all 3 files. The memo's lock
+#: spans check+populate, so concurrent probe runs stage once (ADVICE r13).
+_STAGED_MOD3_CACHE = Memo(8)
 
 
 def _staged_dir_intact(src: str) -> bool:
@@ -70,38 +66,34 @@ def _stage_mod3_split(sf_dir: str, table: str, id_col: str, prefix: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    key = (sf_dir, table, id_col)
-    # Lock spans check+populate so concurrent probe runs can't
-    # double-stage; the build itself is a fast single-file pyarrow pass.
-    with _STAGE_LOCK:
-        src = _STAGED_MOD3_CACHE.get(key)
-        # Re-stage unless every part survived an OS tempdir sweep.
-        if src is not None and _staged_dir_intact(src):
-            return src
+    def _mod3(col):
+        # pyarrow has no mod kernel in this build; ids are
+        # non-negative int64, so truncating integer division suffices
+        return pc.subtract(col, pc.multiply(pc.divide(col, 3), 3))
 
-        def _mod3(col):
-            # pyarrow has no mod kernel in this build; ids are
-            # non-negative int64, so truncating integer division suffices
-            return pc.subtract(col, pc.multiply(pc.divide(col, 3), 3))
-
+    def build() -> str:
         src = tempfile.mkdtemp(prefix=prefix)
         t = pq.read_table(f"{sf_dir}/{table}.parquet")
         for k in range(3):
             path = os.path.join(src, f"part{k}.parquet")
             pq.write_table(t.filter(pc.equal(_mod3(t.column(id_col)), k)), path)
             os.utime(path, (1700000000 + 10 * k, 1700000000 + 10 * k))
-        _STAGED_MOD3_CACHE[key] = src
         return src
 
+    # Re-stage unless every part survived an OS tempdir sweep.
+    return _STAGED_MOD3_CACHE.get(
+        file_key(f"{sf_dir}/{table}.parquet", id_col), build, valid=_staged_dir_intact
+    )
 
-#: staged row-range-thirds splits, keyed by (sf_dir, table) — the
-#: row-slice twin of _STAGED_MOD3_CACHE for the three foreachBatch
-#: stream specs that batch by arrival order rather than id residue
-#: (upsert, cumulative-uniques, EWMA — `events` was re-staged by all
-#: three on every bench pass). Same staleness argument: a pure
-#: driver-side derivation of an immutable testdata file; consumers only
-#: READ the staged files and keep per-call checkpoints.
-_STAGED_THIRDS_CACHE: dict = {}
+
+#: staged row-range-thirds splits, keyed by the table's path and file
+#: fingerprint — the row-slice twin of _STAGED_MOD3_CACHE for the
+#: three foreachBatch stream specs that batch by arrival order rather than
+#: id residue (upsert, cumulative-uniques, EWMA — `events` was re-staged
+#: by all three on every bench pass). Same argument: a pure driver-side
+#: derivation of the table; consumers only READ the staged files and keep
+#: per-call checkpoints.
+_STAGED_THIRDS_CACHE = Memo(8)
 
 
 def stage_sliced_thirds(sf_dir: str, table: str, prefix: str) -> str:
@@ -118,11 +110,7 @@ def stage_sliced_thirds(sf_dir: str, table: str, prefix: str) -> str:
 
     import pyarrow.parquet as pq
 
-    key = (sf_dir, table)
-    with _STAGE_LOCK:
-        src = _STAGED_THIRDS_CACHE.get(key)
-        if src is not None and _staged_dir_intact(src):
-            return src
+    def build() -> str:
         src = tempfile.mkdtemp(prefix=prefix)
         t = pq.read_table(f"{sf_dir}/{table}.parquet")
         n = t.num_rows
@@ -131,8 +119,11 @@ def stage_sliced_thirds(sf_dir: str, table: str, prefix: str) -> str:
             path = os.path.join(src, f"part{i}.parquet")
             pq.write_table(t.slice(cuts[i], cuts[i + 1] - cuts[i]), path)
             os.utime(path, (1700000000 + 10 * i, 1700000000 + 10 * i))
-        _STAGED_THIRDS_CACHE[key] = src
         return src
+
+    return _STAGED_THIRDS_CACHE.get(
+        file_key(f"{sf_dir}/{table}.parquet"), build, valid=_staged_dir_intact
+    )
 
 
 def drain_mod3_batches(spark, sf_dir: str, table: str, id_col: str, apply_batch, prefix: str):
@@ -194,7 +185,7 @@ def _portable_band_rows(sig: DataFrame) -> DataFrame:
     ).select("doc_id", "b.band_id", "b.band_hash")
 
 
-_LAYOUT_CACHE: dict = {}
+_LAYOUT_CACHE = Memo(8)
 
 
 def banded_layout_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,7 +206,7 @@ def banded_layout_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return dest
 
-    dest = ext._memo_get(_LAYOUT_CACHE, spark, sf_dir, build)
+    dest = _LAYOUT_CACHE.get(session_key(spark, sf_dir), build)
     return probe_banded_layout(
         spark, dest, banded_rows=banded.where(F.col("doc_id") % 5 == 0)
     )
@@ -289,9 +280,15 @@ def streaming_banded_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # them from two driver threads removes ~1 s of serialized
             # append wall per batch (phase-timed r15: append 1.0 s
             # behind pairs 0.3 s). Failure of either still fails the
-            # batch; a replayed batch overwrites its own pairs delta and
-            # the probe's distinct() absorbs replay-duplicated band rows
-            # — the same replay posture as the sequential order.
+            # batch, but the replay semantics are WEAKER than the
+            # sequential order's: the append can commit while the pairs
+            # write fails, and the replayed batch then probes a layout
+            # that already holds its own band rows — its pairs delta
+            # (overwritten in place) gains within-batch pairs an
+            # uninterrupted run does not emit, and the layout keeps the
+            # batch's rows twice (later probes' distinct() absorbs
+            # those). Batch-owned idempotent appends are ROADMAP
+            # direction C.
             with ThreadPoolExecutor(max_workers=2) as pool:
                 fp = pool.submit(
                     lambda: pairs.write.mode("overwrite").parquet(

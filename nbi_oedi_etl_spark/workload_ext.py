@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nbi_oedi_etl_spark.memo import Memo, session_key
 from nbi_oedi_etl_spark.sources import read_table
 
 
@@ -549,30 +550,10 @@ def _portable_minhash_pairs(docs: DataFrame, sig: DataFrame | None = None) -> Da
     )
 
 
-_PORTABLE_SIG_CACHE: dict = {}
-_MEMO_MAX_ENTRIES = 8
-
-
-def _memo_get(cache: dict, spark: SparkSession, sf_dir: str, build):
-    """Session-scoped DataFrame memo for the two portable-pipeline caches.
-
-    Keyed by ``(applicationId, sf_dir)`` rather than ``id(spark)``:
-    ``id()`` can be recycled after a stopped session is garbage-collected,
-    which would hand back a localCheckpoint bound to a dead context. The
-    applicationId is minted per SparkContext (``newSession()`` clones share
-    it, and their checkpoints ARE valid across clones), so a restarted
-    context always misses and rebuilds. FIFO-bounded so long-lived
-    processes sweeping many sf_dirs (tools/robustness_sweeps.py) release
-    checkpoint RDDs to the ContextCleaner instead of pinning them forever.
-    """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = cache.get(key)
-    if df is None:
-        df = build()
-        cache[key] = df
-        while len(cache) > _MEMO_MAX_ENTRIES:
-            cache.pop(next(iter(cache)))
-    return df
+#: Session-scoped DataFrame memos (see ``memo.session_key``). Bounded so
+#: long-lived processes sweeping many sf_dirs (tools/robustness_sweeps.py)
+#: release checkpoint RDDs to the ContextCleaner instead of pinning them.
+_PORTABLE_SIG_CACHE = Memo(8)
 
 
 def portable_signatures_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -583,7 +564,7 @@ def portable_signatures_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cluster queries (via portable_components), and the estimator
     audit; without the cache one bench/driver session re-runs it ~5×.
     Same keying and staleness argument as ``portable_components``:
-    (applicationId, sf_dir) via ``_memo_get``, immutable testdata
+    (applicationId, sf_dir), immutable testdata
     directories. ONLY for the standard corpus — callers with filtered/
     synthetic doc frames keep building signatures directly."""
 
@@ -591,10 +572,10 @@ def portable_signatures_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = read_table(spark, sf_dir, "documents")
         return _portable_signatures(docs).localCheckpoint(eager=True)
 
-    return _memo_get(_PORTABLE_SIG_CACHE, spark, sf_dir, build)
+    return _PORTABLE_SIG_CACHE.get(session_key(spark, sf_dir), build)
 
 
-_PORTABLE_COMPONENTS_CACHE: dict = {}
+_PORTABLE_COMPONENTS_CACHE = Memo(8)
 
 
 def portable_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -607,9 +588,8 @@ def portable_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``connected_components`` returns a ``localCheckpoint``-backed frame
     (materialized once, lineage truncated), so caching the DataFrame object
     is full reuse: later actions read the checkpointed partitions instead of
-    re-running the propagation loop. Keyed by (applicationId, sf_dir) via
-    ``_memo_get``; testdata directories are immutable so live entries never
-    go stale."""
+    re-running the propagation loop. Keyed by (applicationId, sf_dir);
+    testdata directories are immutable so live entries never go stale."""
     from nbi_oedi_etl_spark.operators import dedup
 
     def build() -> DataFrame:
@@ -618,7 +598,7 @@ def portable_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             _portable_minhash_pairs(docs, sig=portable_signatures_cached(spark, sf_dir))
         )
 
-    return _memo_get(_PORTABLE_COMPONENTS_CACHE, spark, sf_dir, build)
+    return _PORTABLE_COMPONENTS_CACHE.get(session_key(spark, sf_dir), build)
 
 
 def minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nbi_oedi_etl_spark.memo import Memo, session_key
 from nbi_oedi_etl_spark.sources import read_table
 
 # ------------------------------------------------ product quantization
@@ -80,7 +81,7 @@ def _pq_assign(subs: DataFrame, codebook: DataFrame) -> DataFrame:
     return pq_assign(subs, codebook)
 
 
-_PQ_FLAT_INDEX_CACHE: dict = {}
+_PQ_FLAT_INDEX_CACHE = Memo(8)
 
 
 def _pq_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -111,7 +112,6 @@ def _pq_flat_index_cached(spark: SparkSession, sf_dir: str):
     internal ADC call). Returns ``(subs, cb1, a1)`` where ``a1`` is the
     assignment WITH the ``dist`` column."""
     from nbi_oedi_etl_spark.operators.similarity import pq_train_codebook
-    from nbi_oedi_etl_spark.workload_ext import _memo_get
 
     def build():
         subs = _pq_subvectors(spark, sf_dir).localCheckpoint(eager=True)
@@ -121,7 +121,7 @@ def _pq_flat_index_cached(spark: SparkSession, sf_dir: str):
         a1 = _pq_assign(subs, cb1).localCheckpoint(eager=True)
         return (subs, cb1, a1)
 
-    return _memo_get(_PQ_FLAT_INDEX_CACHE, spark, sf_dir, build)
+    return _PQ_FLAT_INDEX_CACHE.get(session_key(spark, sf_dir), build)
 
 
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -673,7 +673,7 @@ IVFPQ_N_QUERIES = 20
 IVFPQ_TOPK = 3
 
 
-_IVFPQ_INDEX_CACHE: dict = {}
+_IVFPQ_INDEX_CACHE = Memo(8)
 
 
 def _ivfpq_index_cached(spark: SparkSession, sf_dir: str):
@@ -688,7 +688,6 @@ def _ivfpq_index_cached(spark: SparkSession, sf_dir: str):
     median-of-3). Returns ``(assign, cent_arr, rsubs, cb1, codes)``."""
     from nbi_oedi_etl_spark.operators import similarity
     from nbi_oedi_etl_spark.operators.similarity import pq_train_codebook
-    from nbi_oedi_etl_spark.workload_ext import _memo_get
 
     def build():
         emb = read_table(spark, sf_dir, "embeddings")
@@ -741,7 +740,7 @@ def _ivfpq_index_cached(spark: SparkSession, sf_dir: str):
         )
         return (assign, cent_arr, rsubs, cb1, codes)
 
-    return _memo_get(_IVFPQ_INDEX_CACHE, spark, sf_dir, build)
+    return _IVFPQ_INDEX_CACHE.get(session_key(spark, sf_dir), build)
 
 
 def ivf_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,5 +1,5 @@
-"""Keying/eviction contract of the portable-pipeline DataFrame memos
-(``workload_ext._memo_get``).
+"""Keying/eviction contract of the session-scoped DataFrame memos
+(``memo.Memo`` keyed by ``memo.session_key``).
 
 Round-5 advice: the old ``id(spark)`` key could be recycled by CPython
 after a stopped session was garbage-collected, serving a localCheckpoint
@@ -7,13 +7,13 @@ bound to a dead SparkContext; entries were also never evicted, pinning
 checkpoint RDDs across many-sf_dir sweeps. The fix keys on
 ``sparkContext.applicationId`` (minted per context — a restarted context
 always misses; ``newSession()`` clones share it, and their checkpoints
-remain valid) and FIFO-bounds the cache. Pure-logic tests via fakes: the
+remain valid) and FIFO-bounds the memo. Pure-logic tests via fakes: the
 hazard is the keying, not the Spark build.
 """
 
 from __future__ import annotations
 
-from nbi_oedi_etl_spark import workload_ext as ext
+from nbi_oedi_etl_spark.memo import Memo, session_key
 
 
 class _FakeContext:
@@ -27,7 +27,7 @@ class _FakeSession:
 
 
 def test_same_context_reuses_and_restarted_context_rebuilds():
-    cache: dict = {}
+    memo = Memo(8)
     builds = []
 
     def build_for(tag):
@@ -38,38 +38,87 @@ def test_same_context_reuses_and_restarted_context_rebuilds():
         return build
 
     s1 = _FakeSession("local-100")
-    assert ext._memo_get(cache, s1, "/sf", build_for("a")) == "df-a"
-    assert ext._memo_get(cache, s1, "/sf", build_for("a2")) == "df-a"  # hit
+    assert memo.get(session_key(s1, "/sf"), build_for("a")) == "df-a"
+    assert memo.get(session_key(s1, "/sf"), build_for("a2")) == "df-a"  # hit
     # a newSession() clone shares the context -> same key, still a hit
     clone = _FakeSession("local-100")
-    assert ext._memo_get(cache, clone, "/sf", build_for("a3")) == "df-a"
+    assert memo.get(session_key(clone, "/sf"), build_for("a3")) == "df-a"
     # id() recycling across a stop(): a NEW context (new applicationId) at
     # the same Python object address must MISS and rebuild
     s2 = _FakeSession("local-200")
-    assert ext._memo_get(cache, s2, "/sf", build_for("b")) == "df-b"
+    assert memo.get(session_key(s2, "/sf"), build_for("b")) == "df-b"
     assert builds == ["a", "b"]
 
 
 def test_distinct_sf_dirs_are_distinct_entries():
-    cache: dict = {}
+    memo = Memo(8)
     s = _FakeSession("local-1")
-    assert ext._memo_get(cache, s, "/sf/a", lambda: "A") == "A"
-    assert ext._memo_get(cache, s, "/sf/b", lambda: "B") == "B"
-    assert ext._memo_get(cache, s, "/sf/a", lambda: "A'") == "A"
+    assert memo.get(session_key(s, "/sf/a"), lambda: "A") == "A"
+    assert memo.get(session_key(s, "/sf/b"), lambda: "B") == "B"
+    assert memo.get(session_key(s, "/sf/a"), lambda: "A'") == "A"
 
 
 def test_fifo_eviction_bounds_the_cache():
-    cache: dict = {}
+    bound = 8
+    memo = Memo(bound)
     s = _FakeSession("local-1")
-    n = ext._MEMO_MAX_ENTRIES + 3
+    n = bound + 3
     for i in range(n):
-        ext._memo_get(cache, s, f"/sf/{i}", lambda i=i: f"df-{i}")
-    assert len(cache) == ext._MEMO_MAX_ENTRIES
+        memo.get(session_key(s, f"/sf/{i}"), lambda i=i: f"df-{i}")
+    assert len(memo) == bound
     # oldest entries evicted -> rebuilt on next ask
-    assert ext._memo_get(cache, s, "/sf/0", lambda: "rebuilt") == "rebuilt"
+    assert memo.get(session_key(s, "/sf/0"), lambda: "rebuilt") == "rebuilt"
     # newest survive
-    assert ext._memo_get(cache, s, f"/sf/{n-1}", lambda: "X") == f"df-{n-1}"
+    assert memo.get(session_key(s, f"/sf/{n-1}"), lambda: "X") == f"df-{n-1}"
 
+
+def test_none_key_builds_and_stores_nothing():
+    memo = Memo(8)
+    assert memo.get(None, lambda: "a") == "a"
+    assert memo.get(None, lambda: "b") == "b"
+    assert len(memo) == 0
+
+
+def test_invalid_hit_rebuilds_and_drop_invalidates():
+    memo = Memo(8)
+    assert memo.get("k", lambda: 1) == 1
+    assert memo.get("k", lambda: 2, valid=lambda v: v == 1) == 1
+    assert memo.get("k", lambda: 2, valid=lambda v: v == 2) == 2
+    memo.drop(lambda key: key == "k")
+    assert memo.get("k", lambda: 3) == 3
+
+
+
+def test_concurrent_population_builds_each_key_once():
+    """The lock spans check+build+store: more threads than cores racing
+    on a few keys (with a short switch interval to force interleaving)
+    build each key exactly once and never overshoot the bound."""
+    import concurrent.futures as cf
+    import sys
+    import threading
+
+    memo = Memo(4)
+    builds: list[int] = []
+    guard = threading.Lock()
+
+    def build_for(k):
+        def build():
+            with guard:
+                builds.append(k)
+            return k
+
+        return build
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with cf.ThreadPoolExecutor(max_workers=16) as ex:
+            futs = [ex.submit(memo.get, i % 4, build_for(i % 4)) for i in range(400)]
+            assert [f.result(timeout=30) for f in futs] == [i % 4 for i in range(400)]
+    finally:
+        sys.setswitchinterval(old)
+    assert sorted(builds) == [0, 1, 2, 3]
+    assert len(memo) == 4
 
 # ---------------------------------------------------------------------------
 # Staged-split cache revalidation (workload_banded): a cached staging dir

@@ -81,3 +81,57 @@ def test_events_ts_rebuild_on_memoized_path(spark):
     r2 = sorted(map(tuple, df2.select("ts").limit(5).collect()))
     assert r1 == r2
     assert len(_TABLE_SCHEMA_MEMO) >= cold_key_count
+
+
+# ---------------------------------------------------------------------------
+# Stream sources share the memo (``ingest.table_schema``): the r15 stream
+# memo keyed on the top path's mtime only, so it (a) cached under a
+# ``None`` mtime forever when ``os.stat`` failed and (b) missed an
+# in-place rewrite of a directory-of-parts table's part file, which leaves
+# the directory's mtime unchanged (ADVICE r15).
+# ---------------------------------------------------------------------------
+
+
+def test_stream_schema_unstatable_path_is_not_memoized(spark, monkeypatch):
+    from nbi_oedi_etl_spark.streaming import ingest
+
+    d = tempfile.mkdtemp()
+    p = f"{d}/documents.parquet"
+    real_stat = os.stat
+
+    def failing_stat(path, *args, **kwargs):
+        if str(path).startswith(d):
+            raise OSError("stat unavailable")
+        return real_stat(path, *args, **kwargs)
+
+    def schema_with_stat_failing():
+        with monkeypatch.context() as m:
+            m.setattr(os, "stat", failing_stat)
+            return ingest.table_schema(spark, d, "documents")
+
+    _write_docs(p, [1], ["x"])
+    before = len(_TABLE_SCHEMA_MEMO)
+    assert [f.name for f in schema_with_stat_failing()] == ["doc_id", "text"]
+    assert len(_TABLE_SCHEMA_MEMO) == before
+    _write_docs(p, [2], ["y"], extra=[7])
+    assert [f.name for f in schema_with_stat_failing()] == ["doc_id", "text", "extra"]
+
+
+def test_stream_schema_reinfers_after_in_place_part_rewrite(spark):
+    from pyspark.sql.types import LongType, StringType
+
+    from nbi_oedi_etl_spark.streaming import ingest
+
+    d = tempfile.mkdtemp()
+    table_dir = f"{d}/documents.parquet"
+    os.mkdir(table_dir)
+    part = f"{table_dir}/part-0.parquet"
+    _write_docs(part, [1], ["x"])
+    dir_st = os.stat(table_dir)
+    assert ingest.table_schema(spark, d, "documents")["doc_id"].dataType == LongType()
+    time.sleep(0.01)
+    pq.write_table(pa.table({"doc_id": pa.array(["1"]), "text": pa.array(["x"])}), part)
+    _bump_mtime(part)
+    os.utime(table_dir, ns=(dir_st.st_atime_ns, dir_st.st_mtime_ns))
+    assert os.stat(table_dir).st_mtime_ns == dir_st.st_mtime_ns
+    assert ingest.table_schema(spark, d, "documents")["doc_id"].dataType == StringType()
