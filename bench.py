@@ -251,8 +251,8 @@ HEADLINE = [
     # probe+append, layout rebuilt per run — the full loop cost)
     "banded_layout_portable",
     "streaming_banded_cdc_dedup",
-    # registered behind the frozen r10 window (_POST_R10_ADDITIONS),
-    # benched same-round: concat-and-cut training-sequence packing
+    # registered after the r10 window froze, benched same-round:
+    # concat-and-cut training-sequence packing
     "corpus_pack_sequences",
     "corpus_pack_slices",
     "corpus_pack_sequences_global",

@@ -1815,10 +1815,9 @@ except ImportError:
 
 SPECS: list[QuerySpec] = [
     # ---- registration order (stable since round 4). External correctness
-    # runs verify a PREFIX of the *final* SPECS list; the round-5 window is
-    # applied by the `_R5_WINDOW` reorder after this literal, which moves
-    # the 50 oldest never-driver-verified oracled specs (waves 5-17,
-    # lang_confusion_matrix … orders_column_profile) to positions 1-50.
+    # runs verify a PREFIX of the *final* SPECS list; the current window
+    # is applied by the `_rotate` reorder after this literal, which moves
+    # `_R15_WINDOW` to positions 1-50.
     # Rounds 1-4 hash-verified 157 distinct oracled specs (evidence banked
     # in CORRECTNESS_r01-04); nothing here regressed since. Rows-only last.
     QuerySpec("cross_source_contamination", ext6.cross_source_contamination, ext6.CONTAMINATION_ORACLE),
@@ -2140,8 +2139,8 @@ SPECS: list[QuerySpec] = [
     # round-9, registered BEHIND the frozen r9 window (the documented
     # overflow path, as multimodal_webp_features was in r6): the GLOBAL
     # (un-keyed) two-pass forms — SCALE.md's "bucket-offset two-pass
-    # prefix sum", implemented this round. Listed in _POST_R9_ADDITIONS;
-    # they enter the r10 window and were benched this round.
+    # prefix sum", implemented this round. They entered the r10 window
+    # and were benched this round.
     QuerySpec("spine_global_running_value_sum", wspine.spine_global_running_value_sum, wspine._SPINE_GLOBAL_RUNNING_SUM_ORACLE),
     QuerySpec("spine_global_event_rank", wspine.spine_global_event_rank, wspine._SPINE_GLOBAL_RANK_ORACLE),
     # round-10: driver-oracled twin of the at-rest LSH banding layout
@@ -2164,7 +2163,7 @@ SPECS: list[QuerySpec] = [
     # round-10, registered BEHIND the frozen r10 window (the documented
     # overflow path): concat-and-cut training-sequence packing — the
     # LLM-pipeline step between chunking and shard assignment. Benched
-    # same-round; enters the r11 window head via _POST_R10_ADDITIONS.
+    # same-round; enters the r11 window head.
     QuerySpec(
         "corpus_pack_sequences",
         ext34.corpus_pack_sequences,
@@ -2210,8 +2209,7 @@ SPECS: list[QuerySpec] = [
     # round-11, registered BEHIND the frozen r11 window (the documented
     # overflow path): the REPAIR half of substring dedup — cut every
     # non-canonical duplicated span (keep-first by min doc_id) and emit
-    # the cleaned corpus. Listed in _POST_R11_ADDITIONS; benched
-    # same-round; enters the r12 window head.
+    # the cleaned corpus. Benched same-round; enters the r12 window head.
     QuerySpec(
         "doc_cut_duplicate_spans",
         ext35.doc_cut_duplicate_spans,
@@ -2258,8 +2256,8 @@ SPECS: list[QuerySpec] = [
         ext35.benchmark_contamination_spans,
         ext35.BENCHMARK_CONTAMINATION_SPANS_ORACLE,
     ),
-    # round-11 wave 2 (behind the frozen r11 window, _POST_R11_ADDITIONS
-    # per the freeze policy — benched same-round, enter the r12 window):
+    # round-11 wave 2 (behind the frozen r11 window, per the freeze
+    # policy — benched same-round, enter the r12 window):
     # product quantization training/encoding + the ADC top-k scan (the
     # 100 TB ANN memory layout: M bytes per vector; composes with the
     # IVF layout as IVF-PQ), the seeded deterministic epoch shuffle
@@ -2356,333 +2354,19 @@ SPECS: list[QuerySpec] = [
     ),
 ]
 
-# ---- round-8 correctness-window rotation ------------------------------
-# The external driver hash-verifies a 50-spec PREFIX of SPECS per round.
-# Window = verification debt first (everything tools/rotation_audit.py
-# flags), then oldest-green refreshers. The r8 audit runs the v2 digest
-# algorithm (ADVICE r7 fixes: stable-value hashing of imported/default
-# constants, AST walk of function-local imports, fail-closed on missing
-# boundary commits) and flags 27 specs: the 8 multimodal siblings (the
-# webp expansion-bound fix + the codec hardening the fault sweep forced
-# propagate through the decode_image_real local-import edge the v1 audit
-# could not see), the 11 streaming specs touched by the r8
-# directory-layout fixes (ingest.table_file_stream), and 8 genuine v1
-# blind-spot escapes from r3-r5 (sketch/streaming/dedup specs whose
-# imported-constant or default-arg dependencies drifted unseen).
-# Positions 28-42 are the r2-green refreshers, 43-50 the oldest r3-green.
-_R8_WINDOW: list[str] = [
-    # -- 27 audit-flagged stale specs (tools/rotation_audit.py, algo v2) --
-    "corpus_prep_pipeline", "embedding_near_dup_exact_small",
-    "kmeans_assign_embeddings", "latest_event_per_user",
-    "minhash_estimator_audit", "multimodal_bmp_resize",
-    "multimodal_bmp_roundtrip", "multimodal_frame_sample",
-    "multimodal_image_features", "multimodal_jpeg_features",
-    "multimodal_resize", "multimodal_wav_features",
-    "multimodal_webp_features", "stateful_session_stats",
-    "streaming_click_purchase_join", "streaming_click_purchase_left_join",
-    "streaming_cms_token_topk", "streaming_cumulative_unique_users",
-    "streaming_ewma_daily", "streaming_exact_dedup",
-    "streaming_foreachbatch_upsert", "streaming_hll_distinct_tokens",
-    "streaming_hourly_resample", "streaming_session_window_stats",
-    "streaming_sliding_window_counts", "streaming_static_enrichment",
-    "streaming_watermark_dedup",
-    # -- 15 r2-green refreshers --
-    "pivot_qty_by_linestatus", "price_percentiles", "priority_shipping_counts",
-    "promo_revenue_by_month", "range_join_order_revenue",
-    "regional_supplier_volume", "salted_event_value_sum",
-    "set_ops_customer_years", "shipping_priority", "sliding_window_counts",
-    "supplier_part_brand_counts", "top_tokens", "unpivot_lineitem_measures",
-    "user_sessions", "window_functions_demo",
-    # -- 8 oldest r3-green refreshers --
-    "cascade_daily_rollup", "char_stats_udtf", "cross_join_region_matrix",
-    "doc_chunking", "doc_gopher_filter", "doc_pii_scrub",
-    "doc_regex_token_estimate", "doc_tfidf_top_terms",
-]
-
-# Specs registered AFTER the r8 window froze (none: the registry stays
-# frozen at 242 per the r7 verdict; any future addition must land here
-# and be benched in the same round).
-_POST_R8_ADDITIONS: list[str] = []
-
-# ---- round-9 correctness-window rotation ------------------------------
-# The r8 boundary commit landed with zero audit debt (the 50
-# `boundary-missing-r8` entries the r8-session audit reported were the
-# fail-closed guard waiting on the driver artifacts; they collapsed to
-# zero once the boundary existed). With no drift to refresh, the r9
-# window = the 3 new keyed spine specs (registered this round, never
-# driver-verified — automatic debt) + `salted_event_value_sum` (its dep
-# closure includes operators/skew.py, which the r9 spine-default change
-# touched — changed-since-green) + the stalest banked evidence: all
-# 28 specs last green in r3 (6 rounds stale, the oldest in the ledger)
-# and 13 of the alphabetically-first r4 greens + 5 specs whose digests
-# moved with the late-round similarity.py codebook refactor (the
-# changed-since-green policy absorbing in-round churn; the 5 displaced
-# voluntary r4 refreshers head the r10 window together with the
-# remaining r4/r5 tranche and the _POST_R9_ADDITIONS global specs).
-_R9_WINDOW: list[str] = [
-    # -- the two-pass-spine family (operators/skew.py), new this round,
-    # plus the one banked spec whose digest moved with the r9 skew edits --
-    "spine_user_sessions", "spine_running_value_sum", "spine_event_rank",
-    "salted_event_value_sum",
-    # -- all 28 r3-green refreshers (oldest evidence in the ledger) --
-    "doc_word_repetition", "embedding_norm_stats", "events_hourly_gapfill",
-    "full_outer_nation_activity", "hash_sample_documents",
-    "idle_rich_customers", "monthly_revenue_growth", "order_price_deciles",
-    "order_price_histogram", "part_name_fuzzy_pairs",
-    "python_datasource_resample", "q10_returned_items",
-    "q11_important_parts", "q13_order_count_distribution",
-    "q15_top_supplier", "q17_small_qty_revenue", "q20_heavy_suppliers",
-    "q21_waiting_suppliers", "q2_best_supplier_per_part",
-    "q6_forecast_revenue", "q8_market_share", "q9_profit_by_nation_year",
-    "rolling_revenue_90d", "scd2_user_events", "shingle_novelty",
-    "simhash_portable", "stratified_sample_documents", "window_rank_suite",
-    # -- 13 oldest r4-green refreshers (alphabetical head of the 37;
-    # ann/embedding_ann/embedding_ivf double as changed-since-r4 debt
-    # after the late-round similarity.py codebook refactor) --
-    "ann_recall_portable", "bloom_decontamination", "bpe_merge_candidates",
-    "char_bigram_lm_score", "cms_token_topk", "copurchase_triangles",
-    "corpus_shard_assignment", "cross_source_contamination",
-    "data_quality_report", "date_function_suite", "doc_bm25_top_terms",
-    "embedding_ann_portable", "embedding_ivf_portable",
-    # -- 5 changed-since-green from the similarity.py codebook refactor
-    # (module-granular digest movement; swapped in for the 5 newest
-    # voluntary r4 refreshers, which return in r10) --
-    "embedding_near_dup_exact_small", "embedding_topk_cosine",
-    "kmeans_assign_embeddings", "kmeans_lloyd_3iter",
-    "semantic_dedup_cells",
-]
-
-# Specs registered AFTER the r9 window froze (the keyed spine family
-# sits INSIDE the window above). The GLOBAL two-pass forms landed later
-# in the round — benched same-round per the freeze policy; they are the
-# natural head of the r10 window.
-_POST_R9_ADDITIONS: list[str] = [
-    "spine_global_running_value_sum",
-    "spine_global_event_rank",
-]
-
-# ---- round-10 correctness-window rotation -----------------------------
-# Window = the full debt list tools/rotation_audit.py reports after this
-# round's code landed (2 never-verified + 19 changed-since-green: the
-# similarity family moved with the shared probe_cells refactor —
-# ADVICE r9 / VERDICT task 4 — salted_event_value_sum with the skew.py
-# dispatch-logging edit, and the dedup family with the band_rows
-# extraction the at-rest banded layout shares), then the stalest banked
-# evidence: all 24 remaining r4-greens and the 5 alphabetically-first
-# r5-greens.
-_R10_WINDOW: list[str] = [
-    # -- 2 never-verified (registered behind the frozen r9 window) +
-    # the 2 r10-registered banded-layout specs (never-verified by
-    # construction; displace the last 2 r5 refreshers,
-    # classifier_calibration_bins / brand_basket_rules, which return
-    # in r11) --
-    "spine_global_running_value_sum", "spine_global_event_rank",
-    "banded_layout_portable", "streaming_banded_cdc_dedup",
-    # -- 19 changed-since-green (this round's similarity/skew/dedup edits) --
-    "ann_recall_portable", "corpus_prep_pipeline", "embedding_ann_portable",
-    "embedding_ivf_portable", "embedding_near_dup_exact_small",
-    "embedding_topk_cosine", "exact_dedup_docs", "kmeans_assign_embeddings",
-    "kmeans_lloyd_3iter", "latest_event_per_user", "minhash_estimator_audit",
-    "near_dup_clusters_portable", "near_dup_clusters_star",
-    "near_dup_pipeline_portable", "ngram_jaccard_small", "part_golden_records",
-    "salted_event_value_sum", "semantic_dedup_cells",
-    "streaming_foreachbatch_upsert",
-    # -- all 24 remaining r4-green refreshers (oldest in the ledger) --
-    "doc_boilerplate_ngrams", "embedding_int8_quantization",
-    "event_bitwise_aggregates", "event_funnel_conversion",
-    "event_type_markov", "hll_distinct_tokens", "hll_tokens_by_source",
-    "incremental_dedup_new_docs", "label_centroid_quality",
-    "leakage_safe_splits", "map_props_surface", "nation_trade_pagerank",
-    "order_rollup_per_customer", "quantile_sketch_order_price",
-    "reservoir_sample_per_source", "scd1_merge_orders",
-    "session_window_stats", "string_function_suite", "user_event_sequences",
-    "variant_props_surface", "weekly_retention_cohorts",
-    "weighted_mixture_sample", "weighted_reservoir_docs", "zipf_slope_tokens",
-    # -- 3 oldest r5-green refreshers (alphabetical head of the 35) --
-    "benford_first_digit", "bm25_search_ranking", "bpe_apply_merges",
-]
-
-# Specs registered AFTER the r10 window froze — benched same-round per
-# the freeze policy; they head the r11 window (retained for the audit
-# trail).
-_POST_R10_ADDITIONS: list[str] = [
-    "corpus_pack_sequences",
-    "corpus_pack_slices",
-    "corpus_pack_sequences_global",
-    "source_token_budget_cap",
-]
-
-# ---- round-11 correctness-window rotation -----------------------------
-# Window = the full debt list tools/rotation_audit.py reports after this
-# round's code landed (5 never-verified: the 4 packing/budget specs
-# registered behind the frozen r10 window + the r11-registered
-# doc_duplicate_spans; 5 changed-since-green: the banded pair moved with
-# the append-guard + compaction additions, salted_event_value_sum with
-# the skew.py keyed_cumsum additions, doc_readability_forcast with its
-# FORCAST-spelling docstring pin, and source_quantile_normalize which
-# joined late when its rank wart was closed via the cumsum dispatch),
-# then the stalest banked evidence: ALL 32 remaining r5-greens
-# (including classifier_calibration_bins and brand_basket_rules,
-# displaced from the r10 window as promised) and — wave 2 — the 8
-# similarity-family specs whose digests moved with the PQ-primitive
-# refactor of operators/similarity.py (they replace the 8
-# alphabetically-first r6-greens, which return at the r12 head
-# together with customer_order_counts). 5 + 5 + 32 + 8 = 50.
-_R11_WINDOW: list[str] = [
-    # -- 5 never-verified --
-    "corpus_pack_sequences", "corpus_pack_slices",
-    "corpus_pack_sequences_global", "source_token_budget_cap",
-    "doc_duplicate_spans",
-    # -- 5 changed-since-green (source_quantile_normalize joined late in
-    # the round when its acknowledged rank-wart was closed via the new
-    # keyed/global cumsum dispatch, displacing the newest r6 refresher
-    # customer_order_counts) --
-    "banded_layout_portable", "streaming_banded_cdc_dedup",
-    "salted_event_value_sum", "doc_readability_forcast",
-    "source_quantile_normalize",
-    # -- all 32 remaining r5-green refreshers (oldest in the ledger) --
-    "brand_basket_rules", "classifier_calibration_bins",
-    "classifier_roc_auc", "daily_active_wau",
-    "daily_volume_seasonal_residuals", "doc_jaccard_prefix_join",
-    "doc_sparse_cosine_pairs", "doc_token_entropy",
-    "dup_cluster_size_histogram", "event_funnel_windowed",
-    "event_type_ewma_daily", "event_value_mad_outliers",
-    "event_value_psi_drift", "event_value_welch_ttest",
-    "kfold_assignment", "lang_confusion_matrix", "lang_source_chi2",
-    "near_dup_source_modularity", "order_price_percentiles_cont",
-    "orders_keyset_pagination", "part_name_sorted_neighborhood",
-    "purchase_conversion_ab_test", "quality_classifier_inference",
-    "rapid_reorder_pairs", "referential_integrity_matrix",
-    "revenue_pareto_analysis", "session_event_trigrams",
-    "source_lang_kl_drift", "table_content_digest", "token_pmi_bigrams",
-    "user_interarrival_stats", "winnowing_fingerprints",
-    # -- 8 changed-since-green (wave 2: the PQ primitives moved into
-    # operators/similarity.py, so every banked spec whose dep closure
-    # includes that module re-entered debt — the entry-24 swap
-    # precedent; the 8 displaced r6 refreshers return at the r12 head) --
-    "ann_recall_portable", "embedding_ann_portable",
-    "embedding_ivf_portable", "embedding_near_dup_exact_small",
-    "embedding_topk_cosine", "kmeans_assign_embeddings",
-    "kmeans_lloyd_3iter", "semantic_dedup_cells",
-]
-
-# Specs registered AFTER the r11 window froze — benched same-round per
-# the freeze policy; they head the r12 window.
-_POST_R11_ADDITIONS: list[str] = [
-    "doc_cut_duplicate_spans",
-    "pack_boundary_stats",
-    "source_temperature_mixture",
-    "streaming_pack_sequences",
-    "benchmark_contamination_spans",
-    "embedding_pq_codes",
-    "embedding_pq_adc_topk",
-    "corpus_epoch_shuffle",
-    "ccnet_perplexity_buckets",
-    "pq_recall_audit",
-    "ivf_pq_portable",
-]
-
-# ---- round-12 correctness-window rotation -----------------------------
-# Window = the 11 never-verified r11 wave-2 specs (the full
-# _POST_R11_ADDITIONS overflow — the largest-ever post-freeze batch per
-# VERDICT r11 task 1) + the r12-registered corpus_pack_sequences_bpe,
-# then the TWO rows-only CDC streams that have never had a driver row
-# check (the driver records the weaker no-oracle check for prefix specs
-# without an oracle_sql entry, as CORRECTNESS_r01 did for the
-# rows-only family — VERDICT task 1 asks for exactly this), then the
-# stalest banked tranche: the 9 r6-greens the _R11_WINDOW comment
-# promised back at the r12 head (the 8 alphabetically-first displaced by
-# the wave-2 similarity swap + customer_order_counts displaced by
-# source_quantile_normalize), then the next 26 alphabetical r6-greens.
-# One changed-since-green joins mid-round: streaming_banded_cdc_dedup's
-# result sink moved to per-batch deltas (the r12 write-amplification
-# fix applied to all three CDC streams), displacing rollup_revenue.
-# 12 + 1 + 2 + 9 + 26 = 50. The 9 remaining r6-greens (rollup_revenue,
-# scd2_user_state_history .. weighted_median_price) queue for r13.
-#
-# FORCAST adjudication (VERDICT r11 task 7, recorded here and in
-# VERIFICATION_r12.md so it stops carrying over): doc_readability_forcast
-# KEEPS its name — FORCAST is the formula's PUBLISHED name (an acronym of
-# FORd, CAylor, STicht 1973; see workload_ext26.py:90), not a typo, so
-# there is nothing to rename.
-# ---- round-13 window ---------------------------------------------------
-# Debt first (tools/rotation_audit.py v4 — the upgraded digest walk that
-# closes the function-local workload-import gap, see _ALGO_VERSION):
-# the r13-registered ivf_pq_recall_curve (never-verified),
-# streaming_banded_cdc_dedup + streaming_pack_sequences (drain-harness
-# staging memo, r13), and near_dup_keep_best (changed-since-r7 — only
-# v4 sees its edge). Then the THREE rows-only CDC streams: the r12
-# verdict requires streaming_ivf_pq_cdc_ann's first-ever driver row at
-# the head of the rows-only allowance, and its two siblings ride the
-# same memoized drain harness so their row checks re-prove it. Then the
-# 9 remaining r6-greens the _R12_WINDOW comment promised (incl.
-# weighted_median_price — the r12 bench's one `weak`, so its
-# CORRECTNESS row is free while the quiet re-measure adjudicates the
-# min-ratio). Then the stalest banked tranche: all 27 remaining
-# r7-greens and the first r8-green. Mid-round displacements (debt
-# always outranks banked-green refreshers): ivf_pq_portable's index
-# side moved into the shared _ivfpq_index_cached memo (one codebook
-# training per session, shared with the new recall curves); the
-# r13-registered lsh_banding_recall_curve and ivf_recall_curve (the
-# exact-tier curve — with the ADC curve it decomposes recall loss into
-# coarse miss vs PQ distortion); and the flat-PQ family
-# (embedding_pq_codes / embedding_pq_adc_topk / pq_recall_audit) moved
-# onto _pq_flat_index_cached (one Lloyd training per session instead
-# of up to ten); and the three events-staging foreachBatch streams
-# (streaming_foreachbatch_upsert / streaming_cumulative_unique_users /
-# streaming_ewma_daily) moved onto the memoized
-# ingest.stage_sliced_thirds (events was re-staged 3x per bench pass).
-# Displaced to the r14 queue: doc_regex_token_estimate, doc_pii_scrub,
-# doc_gopher_filter, doc_chunking, cross_join_region_matrix,
-# char_stats_udtf, cascade_daily_rollup, supplier_busy_intervals,
-# resample_incremental_merge.
-# 13 + 3 + 9 + 25 = 50.
-# ---- round-14 window ---------------------------------------------------
-# The dedicated streaming + ANN verification window the r13 verdict
-# planned, two edit waves:
-# (1) fixing await_with_idle_timeout (arm the idle clock on the first
-#     COMPLETED batch — reference monitor.py:221-274 queues-empty
-#     semantics) edits streaming/ingest.py, and the staged-split
-#     hardening (all-three-part-files stale check + lock, ADVICE r13
-#     #2) edits workload_banded.py → the 16 oracled streaming specs +
-#     banded_layout_portable;
-# (2) the IVF/PQ plan-construction optimization (_lit_matrix single-
-#     Literal codebooks, _pq_assign_fast literal-projection argmin,
-#     TakeOrdered init ids — profiled ~40 s of driver-side expression
-#     churn in the sf0.1 IVF-PQ stream) edits operators/similarity.py +
-#     operators/ivf_layout.py → the ANN/kmeans/PQ family (14 more).
-# 31 oracled debt entries total, verified against tools/
-# rotation_audit.py this round. Then the THREE rows-only CDC streams
-# (same edited harness — their row checks re-prove the drain path).
-# Then the 9 refreshers the r13 mid-round displacements pushed here
-# (doc_regex_token_estimate .. resample_incremental_merge, named in
-# the _R13_WINDOW comment — they keep their two-round-old promise).
-# Then 7 of the alphabetically-first r8-green banked refreshers; the
-# 14 remaining r8-greens (multimodal_resize .. window_functions_demo)
-# queue for r15.
-# 31 + 3 + 9 + 7 = 50.
+# ---- correctness-window rotation ----------------------------------------
+# The external driver hash-verifies a 50-spec prefix of SPECS per round, so
+# queries() order is: _R15_WINDOW, then the other oracled specs, then the
+# rows-only specs (only _ROWS_ONLY_WINDOW_OK may sit inside the window). A
+# spec registered or edited after the window froze goes into
+# _POST_R15_ADDITIONS, the overflow queue that heads the next window.
+# tests/test_rotation.py enforces this: every spec that
+# tools/rotation_audit.verification_debt() flags must be in one of the two.
 _ROWS_ONLY_WINDOW_OK: list[str] = [
     "streaming_ivf_pq_cdc_ann",
     "streaming_banded_cdc_dedup_production",
     "streaming_ivf_cdc_ann",
 ]
-# ---- round-15 window ---------------------------------------------------
-# Heads: the 4 _POST_R14_ADDITIONS (r14 optimization edits behind the
-# freeze — the r14 verdict's item 2: they MUST be driver re-hashed this
-# round or the digest debt goes stale). Then this round's own
-# optimization debt (added as edits land, per the freeze policy). Then
-# the THREE rows-only CDC streams (the r15 optimization targets — their
-# row checks re-prove the drain path after this round's per-batch
-# rewrites). Then the 16 remaining banked r8-green refreshers
-# (multimodal_wav_features .. window_functions_demo — the r14 comment
-# undercounted them as 14; they keep their promise here). The remainder
-# to 50 are the alphabetically-first r9-green refreshers; NEW debt from
-# this round's edits displaces r9 refreshers from the END of the list
-# (the first r15 optimization wave — streaming schema/drain memoization
-# + CDC sink-job overlap — flagged the 16 oracled streaming specs plus
-# banded_layout_portable and stateful_session_stats, displacing 17 of
-# the original 27 r9 slots).
-# 4 + 17 + 6 + 3 + 16 + 4 = 50.
 _R15_WINDOW: list[str] = [
     # -- 4 post-r14 freeze debt (verdict r14 item 2) --
     "doc_cut_duplicate_spans",
@@ -2722,7 +2406,7 @@ _R15_WINDOW: list[str] = [
     "multimodal_image_features",
     "multimodal_jpeg_features",
     "multimodal_resize",
-    # -- 16 banked r8-green refreshers (promised in the r14 comment) --
+    # -- 16 banked r8-green refreshers --
     "multimodal_wav_features", "multimodal_webp_features",
     "pivot_qty_by_linestatus", "price_percentiles",
     "priority_shipping_counts", "promo_revenue_by_month",
@@ -2736,22 +2420,11 @@ _R15_WINDOW: list[str] = [
     "copurchase_triangles",
 ]
 
-# Specs registered OR edited after the r15 window froze must land here
-# and be benched in the same round (the freeze policy); they enter the
-# next window head. r15 CARRIES AN EXCEPTIONAL ENTRY SET: the
-# read_table schema-memo optimization (sources/parquet.py — metadata-
-# only memoization of immutable-table schema inference, ~25-30 s of
-# pure per-pass construction cost across the bench, see
-# OPTIMIZATION_r15.md) touches the ONE function every spec's dependency
-# closure includes, so the function-granular audit flags all 259
-# oracled specs at once. The 47 window slots cover the round's directly
-# optimized paths; the remaining 212 land here. Their value
-# evidence this round is the in-repo driver-gate replica
-# (tests/test_oracle_parity.py: all 260 oracled specs, DuckDB
-# cross-check, run cold in the closing suite) — the memoized schema is
-# value-neutral by construction (the declared schema IS inference's
-# result for an unchanged file set; any file change rotates the
-# fingerprint key and re-infers).
+# The overflow queue holds 212 specs because the read_table schema memo
+# (sources/parquet.py, OPTIMIZATION_r15.md) sits in every spec's dependency
+# closure, so the audit flagged all 259 oracled specs at once; the window
+# took the directly optimized paths. Until they are driver re-hashed, their
+# value evidence is tests/test_oracle_parity.py (DuckDB parity, 260 specs).
 _POST_R15_ADDITIONS: list[str] = [
     "ann_recall_portable", "anti_join_reconciliation", "asof_last_purchase",
     "benchmark_contamination_spans", "benford_first_digit", "bm25_search_ranking",
@@ -2826,273 +2499,10 @@ _POST_R15_ADDITIONS: list[str] = [
     "winnowing_fingerprints", "zipf_slope_tokens",
 ]
 
-_R14_WINDOW: list[str] = [
-    # -- 31 changed-since-green debt (the two edit waves above) --
-    "ann_recall_portable",
-    "banded_layout_portable",
-    "embedding_ann_portable",
-    "embedding_ivf_portable",
-    "embedding_near_dup_exact_small",
-    "embedding_pq_adc_topk",
-    "embedding_pq_codes",
-    "embedding_topk_cosine",
-    "ivf_pq_portable",
-    "ivf_pq_recall_curve",
-    "ivf_recall_curve",
-    "kmeans_assign_embeddings",
-    "kmeans_lloyd_3iter",
-    "pq_recall_audit",
-    "semantic_dedup_cells",
-    "stateful_session_stats",
-    "streaming_banded_cdc_dedup",
-    "streaming_click_purchase_join",
-    "streaming_click_purchase_left_join",
-    "streaming_cms_token_topk",
-    "streaming_cumulative_unique_users",
-    "streaming_ewma_daily",
-    "streaming_exact_dedup",
-    "streaming_foreachbatch_upsert",
-    "streaming_hll_distinct_tokens",
-    "streaming_hourly_resample",
-    "streaming_pack_sequences",
-    "streaming_session_window_stats",
-    "streaming_sliding_window_counts",
-    "streaming_static_enrichment",
-    "streaming_watermark_dedup",
-    # -- 3 rows-only CDC streams (same edited drain harness) --
-    "streaming_ivf_pq_cdc_ann", "streaming_banded_cdc_dedup_production",
-    "streaming_ivf_cdc_ann",
-    # -- 9 refreshers displaced by the r13 mid-round debt --
-    "cascade_daily_rollup", "char_stats_udtf", "cross_join_region_matrix",
-    "doc_chunking", "doc_gopher_filter", "doc_pii_scrub",
-    "doc_regex_token_estimate", "resample_incremental_merge",
-    "supplier_busy_intervals",
-    # -- 7 stalest banked refreshers (alphabetically-first r8-greens) --
-    "doc_tfidf_top_terms", "multimodal_bmp_resize",
-    "multimodal_bmp_roundtrip", "multimodal_frame_sample",
-    "multimodal_image_features", "multimodal_jpeg_features",
-    "multimodal_resize",
-]
-
-# Specs registered OR edited after the r14 window froze must land here
-# and be benched in the same round (the freeze policy); they enter the
-# r15 window head. r14 optimization edits behind the freeze:
-# doc_cut_duplicate_spans (cut application rewritten to per-row array
-# algebra, then the min≠max duplicated-shingle gate — oracle hash-match
-# re-verified locally at all three SFs after each edit),
-# doc_duplicate_spans (the same min≠max gate rewrite, oracle
-# hash-match re-verified locally at all three SFs), and
-# char_bigram_lm_score (docstring-only A/B note from the REVERTED
-# array-adjacency attempt — code shape unchanged, digest moved), and
-# label_centroid_quality (the workload-level pre-normed-cosine wave:
-# the broadcast centroid's norm rides the broadcast instead of
-# re-folding per member row — old-vs-new rows EXACT-equal, reproduced
-# in two independent sessions (VERIFICATION_r14.md entry 23), in one
-# session and oracle hash-match re-verified at all three SFs; its four
-# wave siblings were already inside _R14_WINDOW via the similarity.py
-# digest moves).
-_POST_R14_ADDITIONS: list[str] = [
-    "doc_cut_duplicate_spans",
-    "doc_duplicate_spans",
-    "char_bigram_lm_score",
-    "label_centroid_quality",
-]
-
-# Retained for the rotation audit trail (round-13 window allowance).
-_R13_ROWS_ONLY_WINDOW_OK: list[str] = [
-    "streaming_ivf_pq_cdc_ann",
-    "streaming_banded_cdc_dedup_production",
-    "streaming_ivf_cdc_ann",
-]
-_R13_WINDOW: list[str] = [
-    # -- 13 oracled debt (3 never-verified + 10 changed-since-green) --
-    "ivf_pq_recall_curve", "lsh_banding_recall_curve", "ivf_recall_curve",
-    "streaming_banded_cdc_dedup",
-    "streaming_pack_sequences", "near_dup_keep_best", "ivf_pq_portable",
-    "embedding_pq_codes", "embedding_pq_adc_topk", "pq_recall_audit",
-    "streaming_foreachbatch_upsert", "streaming_cumulative_unique_users",
-    "streaming_ewma_daily",
-    # -- 3 rows-only CDC streams (ivf_pq: FIRST driver row) --
-    "streaming_ivf_pq_cdc_ann", "streaming_banded_cdc_dedup_production",
-    "streaming_ivf_cdc_ann",
-    # -- 9 remaining r6-green refreshers (the r12 displacement debt) --
-    "rollup_revenue", "scd2_user_state_history", "segment_bitmap_overlap",
-    "semi_join_customers", "shard_slot_apportionment", "topk_orders",
-    "upgrade_code_format", "user_state_snapshot_diff",
-    "weighted_median_price",
-    # -- the 25 stalest remaining r7-green refreshers --
-    "asof_last_purchase", "brand_revenue", "copurchase_kcore",
-    "cube_order_stats", "customers_without_orders",
-    "disjunctive_filter_revenue", "doc_base64_codec",
-    "doc_containment_pairs", "doc_lexical_diversity",
-    "doc_unicode_normalize", "embedding_covariance",
-    "event_value_anomalies", "grouping_sets_revenue", "kmv_source_overlap",
-    "large_order_customers", "late_shipment_priority_counts",
-    "lineitem_dispersion_stats", "minhash_lsh_portable",
-    "nation_pair_volume", "near_dup_clusters_recursive_sql",
-    "order_date_format", "orders_above_customer_avg",
-    "orders_column_profile", "pandas_demean_values",
-    "pandas_normalize_text",
-]
-
-# Specs registered after the r13 window fills must land here and be
-# benched in the same round (the freeze policy).
-_POST_R13_ADDITIONS: list[str] = []
-
-# Retained for the rotation audit trail (round-12 window). The two
-# rows-only names that sat in the r12 window under the then-current
-# allowance:
-_R12_ROWS_ONLY_WINDOW_OK: list[str] = [
-    "streaming_banded_cdc_dedup_production",
-    "streaming_ivf_cdc_ann",
-]
-_R12_WINDOW: list[str] = [
-    # -- 12 never-verified (11 post-r11-freeze + the r12 registration) --
-    "doc_cut_duplicate_spans", "pack_boundary_stats",
-    "source_temperature_mixture", "streaming_pack_sequences",
-    "benchmark_contamination_spans", "embedding_pq_codes",
-    "embedding_pq_adc_topk", "corpus_epoch_shuffle",
-    "ccnet_perplexity_buckets", "pq_recall_audit", "ivf_pq_portable",
-    "corpus_pack_sequences_bpe",
-    # -- 1 changed-since-green (per-batch result deltas, r12) --
-    "streaming_banded_cdc_dedup",
-    # -- 2 rows-only CDC streams (first-ever driver row checks) --
-    "streaming_banded_cdc_dedup_production", "streaming_ivf_cdc_ann",
-    # -- 9 promised r6 refreshers (the r11 displacement debt) --
-    "anti_join_reconciliation", "brand_price_quantity_ols",
-    "classifier_pr_curve", "cohort_ltv_curve",
-    "conversion_latency_histogram", "copurchase_bfs_hops",
-    "cumulative_unique_users", "customer_k_anonymity_audit",
-    "customer_order_counts",
-    # -- next 26 alphabetical r6-green refreshers --
-    "customer_rfm_segmentation", "distinct_user_event_pairs",
-    "doc_fingerprints", "doc_lang_guess", "doc_quality",
-    "doc_token_stats", "event_value_imputation", "event_value_twap_daily",
-    "flagship_hourly_resample", "greedy_coverage_selection",
-    "hash_uniformity_ks", "hll_sliding_weekly_users",
-    "journey_similarity_matrix", "json_props_stats",
-    "max_concurrent_sessions_daily", "median_ci_order_stats",
-    "order_ols_price_vs_items", "order_price_equidepth_histogram",
-    "order_rate_interpolation", "part_price_size_skyline",
-    "phrase_search_positions", "pricing_summary",
-    "purchase_attribution_first_last", "ref_q1_count_distinct",
-    "ref_q2_grouped_count_distinct", "ref_q3_topk_per_group",
-]
-
-# Specs registered AFTER the r12 window filled — benched same-round per
-# the freeze policy; they head the r13 window. (Rows-only, so it enters
-# the r13 window's rows-only allowance like its two siblings did in
-# r12.)
-_POST_R12_ADDITIONS: list[str] = ["streaming_ivf_pq_cdc_ann"]
-
-# Retained for the rotation audit trail (round-7 window).
-_R7_WINDOW: list[str] = [
-    # -- 27 audit-flagged stale specs (tools/rotation_audit.py) --
-    "copurchase_kcore", "doc_containment_pairs", "doc_unicode_normalize",
-    "embedding_topk_cosine", "event_value_anomalies", "exact_dedup_docs",
-    "minhash_lsh_portable", "multimodal_bmp_resize", "multimodal_bmp_roundtrip",
-    "multimodal_frame_sample", "multimodal_image_features", "multimodal_resize",
-    "multimodal_wav_features", "multimodal_webp_features",
-    "near_dup_clusters_portable", "near_dup_clusters_recursive_sql",
-    "near_dup_clusters_star", "near_dup_keep_best", "near_dup_pipeline_portable",
-    "ngram_jaccard_small", "orders_column_profile", "part_golden_records",
-    "streaming_click_purchase_join", "streaming_exact_dedup",
-    "streaming_hourly_resample", "streaming_sliding_window_counts",
-    "streaming_watermark_dedup",
-    # -- 8 verdict-named (file-granular) + this round's touched file --
-    "doc_lexical_diversity", "embedding_covariance", "kmv_source_overlap",
-    "resample_incremental_merge", "stateful_session_stats",
-    "streaming_click_purchase_left_join", "streaming_static_enrichment",
-    "supplier_busy_intervals",
-    # -- 15 oldest-green refreshers (last green r2) --
-    "asof_last_purchase", "brand_revenue", "cube_order_stats",
-    "customers_without_orders", "disjunctive_filter_revenue",
-    "doc_base64_codec", "grouping_sets_revenue", "large_order_customers",
-    "late_shipment_priority_counts", "lineitem_dispersion_stats",
-    "nation_pair_volume", "order_date_format", "orders_above_customer_avg",
-    "pandas_demean_values", "pandas_normalize_text",
-]
-
-# Specs registered AFTER the r7 window froze (none: the registry is
-# frozen at 242 per the r6 verdict; any future addition must land here
-# and be benched in the same round).
-_POST_R7_ADDITIONS: list[str] = []
-
-# Retained for the rotation audit trail.
-_R6_WINDOW: list[str] = [
-    # -- the 33 never-driver-verified oracled specs (round-5 queue) --
-    "cumulative_unique_users", "order_ols_price_vs_items",
-    "hll_sliding_weekly_users", "scd2_user_state_history",
-    "part_price_size_skyline", "copurchase_bfs_hops", "classifier_pr_curve",
-    "user_state_snapshot_diff", "customer_k_anonymity_audit",
-    "doc_readability_forcast", "phrase_search_positions",
-    "customer_rfm_segmentation", "event_value_imputation",
-    "purchase_attribution_first_last", "segment_bitmap_overlap",
-    "order_rate_interpolation", "conversion_latency_histogram",
-    "shard_slot_apportionment", "max_concurrent_sessions_daily",
-    "event_value_twap_daily", "hash_uniformity_ks",
-    "order_price_equidepth_histogram", "brand_price_quantity_ols",
-    "median_ci_order_stats", "journey_similarity_matrix", "cohort_ltv_curve",
-    "streaming_cumulative_unique_users", "greedy_coverage_selection",
-    "weighted_median_price", "source_quantile_normalize", "streaming_ewma_daily",
-    "multimodal_jpeg_features", "stateful_session_stats",
-    # -- 17 refreshers: the oldest driver-verified specs (round-1 order) --
-    "flagship_hourly_resample", "ref_q1_count_distinct",
-    "ref_q2_grouped_count_distinct", "ref_q3_topk_per_group",
-    "pricing_summary", "topk_orders", "rollup_revenue",
-    "customer_order_counts", "semi_join_customers", "anti_join_reconciliation",
-    "distinct_user_event_pairs", "upgrade_code_format", "json_props_stats",
-    "doc_token_stats", "doc_quality", "doc_lang_guess", "doc_fingerprints",
-]
-
-# r6 bookkeeping (retained): the webp spec was registered after the r6
-# window froze and entered the r7 window above.
-_POST_R6_ADDITIONS: list[str] = ["multimodal_webp_features"]
-
-# Retained for the rotation audit trail (tests assert the r6 window covers
-# everything the r5 queue deferred).
-_R5_WINDOW: list[str] = [
-    "lang_confusion_matrix", "kmeans_lloyd_3iter", "streaming_static_enrichment",
-    "supplier_busy_intervals", "copurchase_kcore", "kmv_source_overlap",
-    "embedding_covariance", "doc_lexical_diversity", "doc_sparse_cosine_pairs",
-    "winnowing_fingerprints", "semantic_dedup_cells", "token_pmi_bigrams",
-    "source_lang_kl_drift", "kfold_assignment", "dup_cluster_size_histogram",
-    "rapid_reorder_pairs", "part_name_sorted_neighborhood",
-    "streaming_session_window_stats", "event_value_mad_outliers",
-    "minhash_estimator_audit", "doc_token_entropy", "user_interarrival_stats",
-    "bm25_search_ranking", "daily_active_wau", "event_value_psi_drift",
-    "table_content_digest", "session_event_trigrams", "near_dup_source_modularity",
-    "part_golden_records", "resample_incremental_merge",
-    "streaming_click_purchase_left_join", "referential_integrity_matrix",
-    "order_price_percentiles_cont", "orders_keyset_pagination", "bpe_apply_merges",
-    "daily_volume_seasonal_residuals", "purchase_conversion_ab_test",
-    "streaming_foreachbatch_upsert", "event_funnel_windowed",
-    "revenue_pareto_analysis", "quality_classifier_inference",
-    "classifier_calibration_bins", "lang_source_chi2", "brand_basket_rules",
-    "classifier_roc_auc", "benford_first_digit", "doc_jaccard_prefix_join",
-    "event_value_welch_ttest", "event_type_ewma_daily", "orders_column_profile",
-]
-_R5_QUEUE: list[str] = [
-    "cumulative_unique_users", "order_ols_price_vs_items",
-    "hll_sliding_weekly_users", "scd2_user_state_history",
-    "part_price_size_skyline", "copurchase_bfs_hops", "classifier_pr_curve",
-    "user_state_snapshot_diff", "customer_k_anonymity_audit",
-    "doc_readability_forcast", "phrase_search_positions",
-    "customer_rfm_segmentation", "event_value_imputation",
-    "purchase_attribution_first_last", "segment_bitmap_overlap",
-    "order_rate_interpolation", "conversion_latency_histogram",
-    "shard_slot_apportionment", "max_concurrent_sessions_daily",
-    "event_value_twap_daily", "hash_uniformity_ks",
-    "order_price_equidepth_histogram", "brand_price_quantity_ols",
-    "median_ci_order_stats", "journey_similarity_matrix", "cohort_ltv_curve",
-    "streaming_cumulative_unique_users", "greedy_coverage_selection",
-    "weighted_median_price", "source_quantile_normalize", "streaming_ewma_daily",
-]
-
 
 def _rotate(specs: list[QuerySpec]) -> list[QuerySpec]:
     by_name = {s.name: s for s in specs}
-    front = [by_name[n] for n in _R15_WINDOW if n in by_name]
+    front = [by_name[n] for n in _R15_WINDOW]
     front_set = {s.name for s in front}
     rest_oracled = [s for s in specs if s.name not in front_set and s.oracle is not None]
     rest_rows_only = [s for s in specs if s.name not in front_set and s.oracle is None]

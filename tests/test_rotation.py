@@ -8,7 +8,7 @@ oracled spec that was never driver-verified, or whose content digest
 (dep-function sources + referenced module-level constants + oracle SQL,
 see ``tools/rotation_audit.py``) differs from the digest it had at its
 last driver-green round boundary, MUST sit inside the current window or
-the documented ``_POST_R*_ADDITIONS`` overflow queue.  This makes every
+the documented ``_POST_R15_ADDITIONS`` overflow queue.  This makes every
 future window self-auditing: touch a file mid-round and the affected
 specs demand a window slot before the round can ship.
 """
@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import pathlib
 import sys
+
+import pytest
 
 from nbi_oedi_etl_spark import workload
 
@@ -28,6 +30,8 @@ import rotation_audit  # noqa: E402
 
 def test_window_is_prefix_and_fully_oracled():
     names = [s.name for s in workload.SPECS]
+    assert len(workload._R15_WINDOW) == 50
+    assert len(set(workload._R15_WINDOW)) == 50
     assert names[:50] == workload._R15_WINDOW
     by_name = {s.name: s for s in workload.SPECS}
     # oracle-backed except the three documented rows-only CDC streams
@@ -37,6 +41,15 @@ def test_window_is_prefix_and_fully_oracled():
         for n in workload._R15_WINDOW
     )
     assert all(by_name[n].oracle is None for n in workload._ROWS_ONLY_WINDOW_OK)
+
+
+def test_rotate_rejects_unregistered_window_name(monkeypatch):
+    # a misspelled or deleted window name must fail the import, not
+    # silently shorten the verified prefix
+    window = workload._R15_WINDOW[:-1] + ["no_such_spec"]
+    monkeypatch.setattr(workload, "_R15_WINDOW", window)
+    with pytest.raises(KeyError, match="no_such_spec"):
+        workload._rotate(list(workload.SPECS))
 
 
 def test_changed_since_green_debt_is_inside_window():
@@ -59,37 +72,38 @@ def test_changed_since_green_debt_is_inside_window():
 
 
 def test_digests_ignore_memo_cache_warmth():
-    """v3 regression pin: module-level memo caches (mutable dicts) must
-    not enter the digest — v2 hashed them by value, so running queries
-    (warming caches) spuriously flagged the minhash/dedup specs when the
-    audit ran late in a pytest session."""
+    """v3 regression pin: module-level memo caches must not enter the
+    digest — v2 hashed them by value, so running queries (warming caches)
+    spuriously flagged the minhash/dedup specs when the audit ran late in
+    a pytest session."""
     digests_cold = rotation_audit.spec_digests(_REPO)
-    # simulate cache warmth without a Spark session: mutate a module-level
-    # dict that spec functions reference
-    from nbi_oedi_etl_spark import workload_ext
+    # simulate cache warmth without a Spark session: add an entry to every
+    # module-level dict and Memo that spec functions reference
+    from nbi_oedi_etl_spark import workload_banded, workload_ext, workload_ext36
+    from nbi_oedi_etl_spark.memo import Memo
+    from nbi_oedi_etl_spark.operators import banded_layout
+    from nbi_oedi_etl_spark.sources import parquet
 
+    probe = "__digest_warmth_probe__"
+    memos = [
+        val
+        for mod in (workload_ext, workload_banded, workload_ext36, parquet, banded_layout)
+        for val in vars(mod).values()
+        if isinstance(val, Memo)
+    ]
+    assert memos, "no memo to warm: the probe would test nothing"
     poisoned = []
     for name, val in vars(workload_ext).items():
         if isinstance(val, dict) and not name.startswith("__"):
-            val["__digest_warmth_probe__"] = object()
+            val[probe] = object()
             poisoned.append(val)
+    for m in memos:
+        m.get((probe,), object)
     try:
         digests_warm = rotation_audit.spec_digests(_REPO)
     finally:
         for val in poisoned:
-            val.pop("__digest_warmth_probe__", None)
+            val.pop(probe, None)
+        for m in memos:
+            m.drop(lambda key: key == (probe,))
     assert digests_cold == digests_warm
-
-
-def test_window_covers_post_round_additions():
-    # anything registered behind a frozen window must enter the NEXT one
-    assert set(workload._POST_R7_ADDITIONS) <= set(workload._R8_WINDOW)
-    assert set(workload._POST_R8_ADDITIONS) <= set(workload._R9_WINDOW)
-    assert set(workload._POST_R9_ADDITIONS) <= set(workload._R10_WINDOW)
-    assert set(workload._POST_R10_ADDITIONS) <= set(workload._R11_WINDOW)
-    assert set(workload._POST_R11_ADDITIONS) <= set(workload._R12_WINDOW)
-    assert set(workload._POST_R12_ADDITIONS) <= set(workload._R13_WINDOW)
-    assert set(workload._POST_R13_ADDITIONS) <= set(workload._R14_WINDOW)
-    assert set(workload._POST_R14_ADDITIONS) <= set(workload._R15_WINDOW)
-    assert len(workload._R15_WINDOW) == 50
-    assert len(set(workload._R15_WINDOW)) == 50

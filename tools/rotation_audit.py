@@ -26,7 +26,7 @@ round:
 
 Specs whose digest differs from their last-green digest — or that were
 never driver-verified — are the round's *verification debt* and must sit
-inside the current window (or the documented ``_POST_R*_ADDITIONS``
+inside the current window (or the documented ``_POST_R15_ADDITIONS``
 overflow queue).  ``tests/test_rotation.py`` imports
 ``verification_debt()`` so every future window self-audits.
 """
