@@ -32,9 +32,6 @@ class ETLConfig:
     src_path: str = ""
     dest_path: str = ""
     output_dir: str = "etl_output"  # run-relative epoch dir (main.py:58-60)
-    idle_timeout_in_minutes: int = 5  # monitor.py:253-274
-    max_listing_queue_size: int = 1000  # fetch.py:108-112 (streaming backpressure)
-    shuffle_partitions: int | None = None
     job_specific: list[JobSpec] = field(default_factory=list)
 
     @classmethod

@@ -27,6 +27,8 @@ the §2.12 training-data-pipeline extension (SURVEY.md), scale path.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -525,8 +527,7 @@ def cdc_probe_append_ivf_layout(
     n_probe: int = 4,
     query_id_col: str = "query_id",
     vec_col: str = "embedding",
-    result_sink=None,
-) -> DataFrame | None:
+) -> tuple[DataFrame, Callable[[], None]] | None:
     """FUSED CDC step (r14, guide §2.4/§4): probe ``batch`` against all
     PRIOR vectors in the layout, then fold the batch in — the
     ``probe_ivf_layout`` + ``append_to_ivf_layout`` pair a CDC stream
@@ -541,34 +542,25 @@ def cdc_probe_append_ivf_layout(
     writes a local relation with ``coalesce(1)`` (no shuffle; same
     one-file-per-touched-cell layout shape).
 
-    The probe leg resolves its file listing BEFORE the append writes, so
-    results exclude the batch itself — byte-identical to the unfused
-    sequence (also pinned). Returns the probe result, or ``None`` for an
-    empty batch (nothing probed, nothing appended). Batches past
+    Returns ``(result, append)``: the probe result and a thunk that
+    writes the append leg, or ``None`` for an empty batch (nothing
+    probed, nothing to append). The probe leg resolves its file listing
+    before returning, so results exclude the batch itself whenever
+    ``append()`` runs — byte-identical to the unfused sequence (also
+    pinned), and safe to overlap with the result's sink job
+    (``workload_banded.drain_layout_cdc``). Batches past
     ``_MAX_PROBE_BATCH_ROWS`` fall back to the unfused operator pair
-    (distributed probe branch; executor-side assign).
-
-    ``result_sink`` (r15, guide §2.6 — overlap independent jobs): a
-    callable fired with the probe result DataFrame. When given, the sink
-    job and the append write run from two driver threads — they are
-    independent (the probe's listing resolved before the append, so the
-    append's files cannot leak into the sink job) and joining both
-    before returning keeps the caller's batch contract (nothing is in
-    flight when foreachBatch returns). CDC callers save the serialized
-    append wall (~0.6 s/batch phase-timed at sf0.1); the sink is NOT
-    called for an empty batch (``None`` return, nothing to sink)."""
+    (distributed probe branch; executor-side assign), whose listing
+    resolves at ``_layout_scan`` by the same argument."""
     q_src, rows, oversized = _cdc_collect_batch(spark, batch, query_id_col, vec_col)
     if oversized:
         res = probe_ivf_layout(
             spark, path, batch, k=k, n_probe=n_probe,
             query_id_col=query_id_col, vec_col=vec_col,
         )
-        append_to_ivf_layout(
+        return res, lambda: append_to_ivf_layout(
             spark, path, batch, id_col=query_id_col, vec_col=vec_col
         )
-        if result_sink is not None:
-            result_sink(res)
-        return res
     if not rows:
         return None
     mat = np.asarray([r[1] for r in rows], dtype=np.float64)
@@ -606,21 +598,7 @@ def cdc_probe_append_ivf_layout(
         "cell"
     )
 
-    def _append() -> None:
-        assigned.write.mode("append").partitionBy("cell").parquet(path)
-
-    if result_sink is not None:
-        # §2.6: sink the probe result while the append writes — two
-        # independent jobs, joined before return (see docstring)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fs_, fa_ = pool.submit(result_sink, res), pool.submit(_append)
-            fs_.result()
-            fa_.result()
-    else:
-        _append()
-    return res
+    return res, lambda: assigned.write.mode("append").partitionBy("cell").parquet(path)
 
 
 def cdc_probe_append_ivf_pq_layout(
@@ -631,8 +609,7 @@ def cdc_probe_append_ivf_pq_layout(
     n_probe: int = 4,
     query_id_col: str = "query_id",
     vec_col: str = "embedding",
-    result_sink=None,
-) -> DataFrame | None:
+) -> tuple[DataFrame, Callable[[], None]] | None:
     """Compressed-tier twin of ``cdc_probe_append_ivf_layout``: one
     bounded collect shared by the ADC probe leg and the PQ-encoding
     append leg. The encode itself stays the ``_pq_encode_codes``
@@ -643,22 +620,18 @@ def cdc_probe_append_ivf_pq_layout(
     ``_is_pq_layout`` existence check) collapse to one read each. The
     every-row dim guard moves driver-side over the shared rows — same
     refusal contract as ``append_to_ivf_pq_layout`` (ADVICE r12), zero
-    extra jobs. Returns the ADC probe result, or ``None`` for an empty
-    batch; oversized batches fall back to the unfused operator pair.
-    ``result_sink`` — see ``cdc_probe_append_ivf_layout`` (§2.6 overlap
-    of the sink job with the append write, joined before return)."""
+    extra jobs. Returns ``(ADC probe result, append thunk)``, or ``None``
+    for an empty batch — the ``cdc_probe_append_ivf_layout`` contract;
+    oversized batches fall back to the unfused operator pair."""
     q_src, rows, oversized = _cdc_collect_batch(spark, batch, query_id_col, vec_col)
     if oversized:
         res = probe_ivf_pq_layout(
             spark, path, batch, k=k, n_probe=n_probe,
             query_id_col=query_id_col, vec_col=vec_col,
         )
-        append_to_ivf_pq_layout(
+        return res, lambda: append_to_ivf_pq_layout(
             spark, path, batch, id_col=query_id_col, vec_col=vec_col
         )
-        if result_sink is not None:
-            result_sink(res)
-        return res
     if not rows:
         return None
     cent_unit = read_ivf_codebook(spark, path)
@@ -724,19 +697,7 @@ def cdc_probe_append_ivf_pq_layout(
         .repartition("cell")
     )
 
-    def _append() -> None:
-        encoded.write.mode("append").partitionBy("cell").parquet(path)
-
-    if result_sink is not None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fs_, fa_ = pool.submit(result_sink, res), pool.submit(_append)
-            fs_.result()
-            fa_.result()
-    else:
-        _append()
-    return res
+    return res, lambda: encoded.write.mode("append").partitionBy("cell").parquet(path)
 
 
 # ---------------------------------------------- at-rest IVF-PQ layout

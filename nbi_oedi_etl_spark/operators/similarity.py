@@ -112,27 +112,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     ]
 
 
-def signlsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket id: bit i = sign(vec · plane_i) → integer bucket.
-
-    Implemented as an Arrow-batched Pandas UDF doing ONE numpy matrix
-    multiply (batch × dim) @ (dim × n_planes) per batch — the per-plane
-    expression-tree alternative (aggregate/zip_with dot per plane) is
-    interpreted row-at-a-time with boxing and measured 10-100× slower.
-    The plane matrix is captured in the UDF closure (tiny, ships with the
-    task closure — same effect as a broadcast variable at this size)."""
-    plane_mat = np.asarray(planes, dtype=np.float64).T  # dim × n_planes
-    powers = (2 ** np.arange(len(planes), dtype=np.int64)).astype(np.int64)
-
-    @pandas_udf("long")
-    def _bucket(v: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
-        bits = (mat @ plane_mat) >= 0.0
-        return pd.Series(bits @ powers)
-
-    return _bucket(vec)
-
-
 def multitable_signlsh_buckets(
     vec: Column, planes: list[list[float]], n_tables: int, bits_per_table: int
 ) -> Column:

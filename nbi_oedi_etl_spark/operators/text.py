@@ -34,11 +34,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def stopword_hits(text: Column | str, words: tuple[str, ...]) -> Column:
-    """Number of tokens that are in ``words`` (JVM higher-order filter)."""
-    return F.size(F.filter(tokens(text), lambda x: x.isin(*words)))
-
-
 def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """doc stats: token count, char length, mean token length."""
     t = F.col(text_col)

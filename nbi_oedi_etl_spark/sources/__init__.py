@@ -25,7 +25,6 @@ from nbi_oedi_etl_spark.sources.parquet import (
     register_views,
 )
 from nbi_oedi_etl_spark.sources.sinks import (
-    bypass_copy,
     write_bucketed,
     write_clustered,
     write_parquet,
@@ -53,7 +52,6 @@ __all__ = [
     "ingest_untrusted_records",
     "ingest_untrusted",
     "read_with_quarantine",
-    "bypass_copy",
     "write_bucketed",
     "write_clustered",
     "write_parquet",

@@ -1,4 +1,4 @@
-"""Parquet sinks + bypass copy.
+"""Parquet sinks.
 
 Reference behaviors reproduced:
 - snappy parquet output (transform.py:151-154, README.md:230) — Spark session
@@ -7,7 +7,8 @@ Reference behaviors reproduced:
   ``upgrade=…/state=…`` key under a timestamped run dir (upload.py:55,
   main.py:58-60); we use ``partitionBy`` which produces the same layout from
   the partition columns instead of string-echoing keys.
-- bypass copy of dimension/metadata tables, unmodified (fetch.py:161-196).
+- bypass copy of dimension/metadata tables, unmodified (fetch.py:161-196),
+  lives in ``pipeline.bypass_metadata``.
 
 Scale notes: ``partitionBy`` at 100 TB needs care — writing P partitions from
 T tasks creates up to P×T files. Repartition by the partition columns first
@@ -27,15 +28,13 @@ def write_parquet(
     path: str,
     partition_by: Sequence[str] = (),
     mode: str = "error",
-    compression: str = "snappy",
-    cluster_output: bool = True,
 ) -> None:
     """Write a DataFrame as (optionally hive-partitioned) snappy parquet."""
-    if partition_by and cluster_output:
+    if partition_by:
         # Co-locate rows of the same output partition to avoid the P×T
         # small-file explosion at scale.
         df = df.repartition(*partition_by)
-    writer = df.write.mode(mode).option("compression", compression)
+    writer = df.write.mode(mode).option("compression", "snappy")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -71,18 +70,6 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-
-
-def bypass_copy(spark: SparkSession, src: str, dest: str, mode: str = "error") -> int:
-    """Copy a parquet dataset through unmodified (identity map).
-
-    Semantics of reference ``bypass_etl`` (fetch.py:161-196): metadata files
-    go source → destination without decode/transform. A re-encode via Spark
-    preserves rows/schema (not byte-identity); returns row count copied.
-    """
-    df = spark.read.parquet(src)
-    df.write.mode(mode).parquet(dest)
-    return spark.read.parquet(dest).count()
 
 
 def write_clustered(

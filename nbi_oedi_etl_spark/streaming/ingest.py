@@ -32,9 +32,11 @@ from nbi_oedi_etl_spark.memo import file_key
 from nbi_oedi_etl_spark.sources import parquet
 
 
-def scoped_streaming_session(
-    spark: SparkSession, shuffle_partitions: int = 8
-) -> SparkSession:
+#: state-store partitions of a scoped drain session (see below)
+_DRAIN_SHUFFLE_PARTITIONS = 8
+
+
+def scoped_streaming_session(spark: SparkSession) -> SparkSession:
     """A cloned session (``newSession``: shared SparkContext + cached data,
     ISOLATED SQLConf) for running one availableNow drain.
 
@@ -46,13 +48,13 @@ def scoped_streaming_session(
     serializes concurrent use of the session and leaks the pin if the
     restore is skipped (interrupt mid-drain). A cloned session makes the
     pin scoped by construction: set once, never restored, invisible to the
-    caller. At real scale pass state partitions ≈ cluster parallelism.
+    caller. At real scale raise it to ≈ cluster parallelism.
 
     The session timezone is re-pinned to UTC because watermarks require
     TIMESTAMP (with local tz): NTZ→TZ casts are then value-preserving and
     windows line up with batch/oracle naive timestamps."""
     s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    s.conf.set("spark.sql.shuffle.partitions", str(_DRAIN_SHUFFLE_PARTITIONS))
     s.conf.set("spark.sql.session.timeZone", "UTC")
     return s
 
@@ -69,20 +71,6 @@ def table_schema(spark: SparkSession, sf_dir: str, table: str):
     return parquet._TABLE_SCHEMA_MEMO.get(
         file_key(path), lambda: spark.read.parquet(path).schema
     )
-
-
-def read_file_stream(
-    spark: SparkSession,
-    path: str,
-    schema,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-source stream over a parquet directory (the reference's listed
-    file queue, fetch.py:40-158, as a declarative source)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
 
 
 def table_file_stream(

@@ -24,10 +24,13 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from nbi_oedi_etl_spark import workload_ext as ext
 from nbi_oedi_etl_spark.memo import Memo, file_key, session_key
 from nbi_oedi_etl_spark.operators.banded_layout import (
+    append_to_banded_layout,
+    banded_rows_for_layout,
     probe_banded_layout,
     write_banded_layout,
 )
@@ -157,6 +160,72 @@ def drain_mod3_batches(spark, sf_dir: str, table: str, id_col: str, apply_batch,
     return s
 
 
+def drain_layout_cdc(
+    spark, sf_dir: str, table: str, id_col: str, prefix: str, out_schema: str,
+    fit, step,
+) -> DataFrame:
+    """Layout CDC stream over ``drain_mod3_batches``: the one batch-commit
+    policy of the banded and IVF streams. Each micro-batch either fits
+    the at-rest layout or probes it and folds itself in, and writes only
+    its own results to a ``batch=<id>`` delta under the result root —
+    union-on-read reassembles them, and a replayed batch overwrites only
+    its own partition (r12: the old prev-union-overwrite rewrote the
+    accumulated results every trigger, O(B²) write volume).
+
+    - ``fit(bs, batch, layout) -> bool`` runs until it returns True; False
+      means there was nothing to fit (IVF fits on the first NONEMPTY
+      batch). Its batch writes an empty delta.
+    - ``step(bs, batch, layout) -> (result, append) | None`` runs on every
+      batch after that. ``None`` (an empty batch) writes an empty delta.
+
+    Empty deltas carry ``out_schema``: ``repartition(1)`` forces a
+    schema-bearing part file, so union-on-read never sees a footer-less
+    delta dir.
+
+    r15 (guide §2.6 — overlap independent jobs): ``result`` is written
+    from one driver thread while ``append()`` runs on another; the step
+    resolved the probe's layout listing before returning, so the
+    append's files cannot leak into the result job. Both legs are joined
+    before the batch returns, and a failure of either fails the batch.
+    This removes the serialized append wall per batch (phase-timed r15:
+    banded append 1.0 s behind pairs 0.3 s, IVF ~0.6 s), but the replay
+    semantics are WEAKER than the sequential order's: the append can
+    commit while the result write fails, and the replayed batch then
+    probes a layout that already holds its own rows — its delta
+    (overwritten in place) gains within-batch matches an uninterrupted
+    run does not emit, and the layout keeps the batch's rows twice.
+    Batch-owned idempotent appends are ROADMAP direction C."""
+    import os
+
+    layout = tempfile.mkdtemp(prefix=f"{prefix}layout_") + "/layout"
+    out_root = tempfile.mkdtemp(prefix=f"{prefix}out_")
+    state = {"fitted": False}
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        bs = batch_df.sparkSession
+        dest = os.path.join(out_root, f"batch={batch_id}")
+        out = None
+        if state["fitted"]:
+            out = step(bs, batch_df, layout)
+        else:
+            state["fitted"] = fit(bs, batch_df, layout)
+        if out is None:
+            empty = bs.createDataFrame([], out_schema).repartition(1)
+            empty.write.mode("overwrite").parquet(dest)
+            return
+        result, append = out
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            legs = [
+                pool.submit(lambda: result.write.mode("overwrite").parquet(dest)),
+                pool.submit(append),
+            ]
+        for leg in legs:  # both joined by the pool's exit; re-raise
+            leg.result()
+
+    s = drain_mod3_batches(spark, sf_dir, table, id_col, apply_batch, f"{prefix}src_")
+    return s.read.parquet(out_root).select(*StructType.fromDDL(out_schema).fieldNames())
+
+
 def _portable_band_rows(sig: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_hash) under the md5-portable family: the
     band hash is the same hex→bigint md5 bridge the signatures use,
@@ -212,18 +281,37 @@ def banded_layout_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_PAIRS_CDC_SCHEMA = "doc_id_new long, doc_id_corpus long"
+
+
+def _banded_cdc_step(bs: SparkSession, layout: str, rows: DataFrame):
+    """The banded twins' CDC step. r14 (guide §2.4): the banding pipeline
+    is the expensive half of BOTH legs — checkpoint the band rows once
+    and share them, instead of probe and append each re-deriving them
+    from the raw batch. Within-batch distinct only: LSH emits a pair once
+    per matching band; ACROSS batches pair sets are disjoint by
+    construction (doc_id_new ∈ this batch, each doc arrives exactly
+    once), so per-batch deltas need no global distinct. The probe's
+    corpus listing resolves here (``probe_banded_layout``'s eager read),
+    so the append's new files cannot leak into the pairs job. The layout
+    operators are module globals looked up at call time, so a caller
+    that rebinds them (span tracing) sees every call."""
+    rows = rows.localCheckpoint(eager=True)
+    pairs = probe_banded_layout(
+        bs, layout, banded_rows=rows, rows_materialized=True
+    ).distinct()
+    return pairs, lambda: append_to_banded_layout(bs, layout, banded_rows=rows)
+
+
 def streaming_banded_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banded layout's CDC loop run as a STREAM: documents arrive in
     3 deterministic micro-batches (batch k = doc_id % 3 == k, one file
     per trigger); each batch is probed against the at-rest layout for
     near-dup candidates among all PRIOR docs, then its band rows are
-    appended so the next batch sees it. Each batch writes ONLY its own
-    pairs to a ``batch=<id>`` delta (r12 — the per-batch-delta
-    discipline applied to the RESULT side as well as the layout;
-    union-on-read reassembles, a replayed batch overwrites only its own
-    partition). The drained union must equal the one-shot cross-batch
-    pairs — later batch as the "new" side — which the oracle computes
-    directly from the %3 split.
+    appended so the next batch sees it (``drain_layout_cdc`` — per-batch
+    pair deltas, union-on-read). The drained union must equal the
+    one-shot cross-batch pairs — later batch as the "new" side — which
+    the oracle computes directly from the %3 split.
 
     Scale: per batch the probe reads only the batch's probed pcell
     partitions (the plan-pinned prune) and the append writes one file
@@ -234,90 +322,22 @@ def streaming_banded_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     are value-checkable cross-engine — same trade as
     ``minhash_lsh_portable`` vs the xxhash64 production default.
     """
-    import os
 
-    from nbi_oedi_etl_spark.operators.banded_layout import (
-        append_to_banded_layout,
-        write_banded_layout,
-    )
-
-    layout = tempfile.mkdtemp(prefix="banded_cdc_layout_") + "/layout"
-    pairs_root = tempfile.mkdtemp(prefix="banded_cdc_pairs_")
-    state = {"version": -1}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bs = batch_df.sparkSession
-        rows = _portable_band_rows(
-            ext._portable_signatures(batch_df.select("doc_id", "text"))
+    def rows(batch: DataFrame) -> DataFrame:
+        return _portable_band_rows(
+            ext._portable_signatures(batch.select("doc_id", "text"))
         )
-        if state["version"] < 0:
-            # first batch: nothing before it — just materialize the layout
-            write_banded_layout(None, layout, n_buckets=16, banded_rows=rows)
-            # repartition(1) forces a schema-bearing (empty) part file,
-            # so union-on-read never sees a footer-less delta dir
-            pairs = bs.createDataFrame(
-                [], "doc_id_new long, doc_id_corpus long"
-            ).repartition(1)
-        else:
-            # r14 (guide §2.4): the signature pipeline (shingle explode +
-            # 8 md5 min-aggregates) is the expensive half of BOTH legs —
-            # checkpoint the band rows once and share them, instead of
-            # probe and append each re-deriving them from the raw batch
-            # (two full signature passes per batch before this round).
-            rows = rows.localCheckpoint(eager=True)
-            # within-batch distinct only: LSH emits a pair once per
-            # matching band; ACROSS batches pair sets are disjoint by
-            # construction (doc_id_new ∈ this batch, each doc arrives
-            # exactly once), so per-batch deltas need no global distinct
-            pairs = probe_banded_layout(
-                bs, layout, banded_rows=rows, rows_materialized=True
-            ).distinct()
-            # r15 (guide §2.6 — overlap independent jobs): the pairs
-            # delta and the layout append are independent sink jobs over
-            # the same checkpointed rows, and the probe's corpus listing
-            # resolved ABOVE (probe_banded_layout's eager read), so the
-            # append's new files cannot leak into the pairs job. Running
-            # them from two driver threads removes ~1 s of serialized
-            # append wall per batch (phase-timed r15: append 1.0 s
-            # behind pairs 0.3 s). Failure of either still fails the
-            # batch, but the replay semantics are WEAKER than the
-            # sequential order's: the append can commit while the pairs
-            # write fails, and the replayed batch then probes a layout
-            # that already holds its own band rows — its pairs delta
-            # (overwritten in place) gains within-batch pairs an
-            # uninterrupted run does not emit, and the layout keeps the
-            # batch's rows twice (later probes' distinct() absorbs
-            # those). Batch-owned idempotent appends are ROADMAP
-            # direction C.
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fp = pool.submit(
-                    lambda: pairs.write.mode("overwrite").parquet(
-                        os.path.join(pairs_root, f"batch={batch_id}")
-                    )
-                )
-                fa = pool.submit(
-                    append_to_banded_layout, bs, layout, banded_rows=rows
-                )
-                fp.result()
-                fa.result()
-            state["version"] = batch_id
-            return
-        # r12 (the streaming_pack_sequences discipline, applied to the
-        # RESULT side too): write only this batch's pairs to a
-        # batch=<id> delta — the old prev-union-overwrite rewrote the
-        # accumulated pair history every trigger, O(B²) write volume
-        # over the stream's life. The layout was always append-only;
-        # now the results are as well. A replayed batch overwrites only
-        # its own partition (exactly-once preserved).
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_root, f"batch={batch_id}")
-        )
-        state["version"] = batch_id
 
-    s = drain_mod3_batches(
-        spark, sf_dir, "documents", "doc_id", apply_batch, "banded_cdc_src_"
+    def fit(bs, batch, layout) -> bool:
+        # first batch: nothing before it — just materialize the layout
+        write_banded_layout(None, layout, n_buckets=16, banded_rows=rows(batch))
+        return True
+
+    return drain_layout_cdc(
+        spark, sf_dir, "documents", "doc_id", "banded_cdc_",
+        _PAIRS_CDC_SCHEMA, fit,
+        lambda bs, batch, layout: _banded_cdc_step(bs, layout, rows(batch)),
     )
-    return s.read.parquet(pairs_root).select("doc_id_new", "doc_id_corpus")
 
 
 def streaming_banded_cdc_dedup_production(
@@ -336,70 +356,26 @@ def streaming_banded_cdc_dedup_production(
     premium the r10 verdict asked to quantify (task 5): both twins run in
     the bench headline set, so BENCH_DETAIL carries the ratio per round.
     """
-    import os
 
-    from nbi_oedi_etl_spark.operators.banded_layout import (
-        append_to_banded_layout,
-        banded_rows_for_layout,
-        probe_banded_layout,
-        write_banded_layout,
-    )
-
-    layout = tempfile.mkdtemp(prefix="banded_cdc_prod_layout_") + "/layout"
-    pairs_root = tempfile.mkdtemp(prefix="banded_cdc_prod_pairs_")
-    state = {"version": -1}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bs = batch_df.sparkSession
-        docs = batch_df.select("doc_id", "text")
-        if state["version"] < 0:
-            # SAME banding geometry as the portable twin (8 hashes ×
-            # 4 bands, 16 buckets) so the bench ratio isolates the HASH
-            # FAMILY premium, not a signature-width difference
-            write_banded_layout(
-                docs, layout, num_hashes=8, bands=4, n_buckets=16
-            )
-            pairs = bs.createDataFrame(
-                [], "doc_id_new long, doc_id_corpus long"
-            ).repartition(1)
-        else:
-            # r14 (guide §2.4, the portable twin's lever): band the batch
-            # ONCE with the layout's own sidecar parameters, checkpoint,
-            # and share the rows between probe and append — before this
-            # round each leg re-ran the xxhash64 banding pipeline itself.
-            rows = banded_rows_for_layout(bs, layout, docs).localCheckpoint(
-                eager=True
-            )
-            # per-batch delta + within-batch distinct (see the portable
-            # twin — cross-batch pair sets are disjoint by construction)
-            pairs = probe_banded_layout(
-                bs, layout, banded_rows=rows, rows_materialized=True
-            ).distinct()
-            # r15 §2.6 overlap — same two independent sink jobs as the
-            # portable twin (listing already resolved by the probe)
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fp = pool.submit(
-                    lambda: pairs.write.mode("overwrite").parquet(
-                        os.path.join(pairs_root, f"batch={batch_id}")
-                    )
-                )
-                fa = pool.submit(
-                    append_to_banded_layout, bs, layout, banded_rows=rows
-                )
-                fp.result()
-                fa.result()
-            state["version"] = batch_id
-            return
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_root, f"batch={batch_id}")
+    def fit(bs, batch, layout) -> bool:
+        # SAME banding geometry as the portable twin (8 hashes × 4 bands,
+        # 16 buckets) so the bench ratio isolates the HASH FAMILY
+        # premium, not a signature-width difference
+        write_banded_layout(
+            batch.select("doc_id", "text"), layout, num_hashes=8, bands=4,
+            n_buckets=16,
         )
-        state["version"] = batch_id
+        return True
 
-    s = drain_mod3_batches(
-        spark, sf_dir, "documents", "doc_id", apply_batch,
-        "banded_cdc_prod_src_",
+    def step(bs, batch, layout):
+        # band the batch ONCE with the layout's own sidecar parameters
+        rows = banded_rows_for_layout(bs, layout, batch.select("doc_id", "text"))
+        return _banded_cdc_step(bs, layout, rows)
+
+    return drain_layout_cdc(
+        spark, sf_dir, "documents", "doc_id", "banded_cdc_prod_",
+        _PAIRS_CDC_SCHEMA, fit, step,
     )
-    return s.read.parquet(pairs_root).select("doc_id_new", "doc_id_corpus")
 
 
 # Cross-batch pairs directly from the %3 split: a doc's batch is
@@ -461,15 +437,35 @@ WHERE q.doc_id % 5 = 0 AND c.doc_id % 5 != 0
 """
 
 
+_ANN_CDC_SCHEMA = "query_id long, vec_id long, cos_sim double, rank int"
+
+
+def _ivf_cdc_fit(write_layout):
+    """``fit`` for the IVF streams: the layout fits on the first NONEMPTY
+    batch (the r11 wave-2 self-review caught a single-flag version taking
+    the probe branch against a never-written layout when only the FIRST
+    batch is empty)."""
+
+    def fit(bs, batch, layout) -> bool:
+        vecs = batch.select("vec_id", "embedding")
+        if vecs.isEmpty():
+            return False
+        write_layout(vecs, layout)
+        return True
+
+    return fit
+
+
 def streaming_ivf_cdc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF layout's CDC loop as a STREAM — the ANN sibling of the
     banded loops above (r11, after the r11 append/compaction legs):
     embeddings arrive in 3 deterministic micro-batches (vec_id % 3); the
-    first batch materializes the layout (codebook fitted once, seeded —
-    then FIXED for the stream's life, the standard IVF practice); each
-    later batch is probed for its top-k nearest among all PRIOR vectors,
-    then appended so the next batch sees it. Each batch writes only its
-    own probe results to a ``batch=<id>`` delta (r12), union-on-read.
+    first nonempty batch materializes the layout (codebook fitted once,
+    seeded — then FIXED for the stream's life, the standard IVF
+    practice); each later batch is probed for its top-k nearest among all
+    PRIOR vectors, then appended so the next batch sees it. Query ids are
+    the batch's vec_ids, so the per-batch deltas of ``drain_layout_cdc``
+    are disjoint across batches by construction.
 
     Rows-only: the seeded k-means codebook is not reproducible in SQL —
     the same adjudication as ``embedding_ivf_topk``; the VALUE evidence
@@ -478,74 +474,21 @@ def streaming_ivf_cdc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus the oracled exact-cosine specs. Deterministic end-to-end given
     the fixed seed, so the driver's rows-only check is stable.
     """
-    import os
-
     from nbi_oedi_etl_spark.operators.ivf_layout import (
         cdc_probe_append_ivf_layout,
         write_ivf_layout,
     )
 
-    layout = tempfile.mkdtemp(prefix="ivf_cdc_layout_") + "/layout"
-    out_root = tempfile.mkdtemp(prefix="ivf_cdc_out_")
-    # `fitted` tracks whether the layout exists — SEPARATE from batch
-    # progress: an empty batch writes an (empty) result delta without
-    # fitting a layout (the r11 wave-2 self-review caught the
-    # single-flag version taking the probe branch against a
-    # never-written layout when only the FIRST batch is empty).
-    state = {"fitted": False}
-    empty_schema = "query_id long, vec_id long, cos_sim double, rank int"
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bs = batch_df.sparkSession
-        vecs = batch_df.select("vec_id", "embedding")
-        if not state["fitted"]:
-            if vecs.isEmpty():
-                # nothing to index — the layout fits on the first
-                # NONEMPTY batch. repartition(1) forces a schema-bearing
-                # empty part file for union-on-read.
-                res = bs.createDataFrame([], empty_schema).repartition(1)
-            else:
-                write_ivf_layout(vecs, layout, n_cells=8)
-                state["fitted"] = True
-                res = bs.createDataFrame([], empty_schema).repartition(1)
-        else:
-            # r14 fused CDC step (guide §2.4/§4): one driver collect
-            # shared by the probe and append legs, driver-side cell
-            # assignment instead of a second pandas-UDF scan, and the
-            # old per-batch isEmpty peek folded into the same collect
-            # (None = empty batch). Results pinned identical to the
-            # probe-then-append pair in tests/test_new_op_properties.py.
-            # r15: the result delta is written INSIDE the fused step via
-            # result_sink (guide §2.6 — the sink job overlaps the append
-            # write; both joined before the batch returns).
-            res = cdc_probe_append_ivf_layout(
-                bs,
-                layout,
-                vecs,
-                k=3,
-                query_id_col="vec_id",
-                result_sink=lambda df: df.write.mode("overwrite").parquet(
-                    os.path.join(out_root, f"batch={batch_id}")
-                ),
-            )
-            if res is not None:
-                return  # delta written by the sink above
-            res = bs.createDataFrame([], empty_schema).repartition(1)
-        # r12: per-batch result DELTA (batch=<id>), union-on-read — the
-        # old prev-union-overwrite rewrote the accumulated results every
-        # trigger (O(B²) write volume; the same anti-pattern the r11
-        # verdict flagged on streaming_pack_sequences, fixed across all
-        # three CDC streams this round). Query ids are this batch's
-        # vec_ids, so deltas are disjoint across batches by construction.
-        res.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"batch={batch_id}")
-        )
-
-    s = drain_mod3_batches(
-        spark, sf_dir, "embeddings", "vec_id", apply_batch, "ivf_cdc_src_"
-    )
-    return s.read.parquet(out_root).select(
-        "query_id", "vec_id", "cos_sim", "rank"
+    # r14 fused CDC step (guide §2.4/§4): one driver collect shared by
+    # the probe and append legs, driver-side cell assignment, and the
+    # empty-batch peek folded into the same collect (None = empty batch)
+    return drain_layout_cdc(
+        spark, sf_dir, "embeddings", "vec_id", "ivf_cdc_", _ANN_CDC_SCHEMA,
+        _ivf_cdc_fit(lambda vecs, layout: write_ivf_layout(vecs, layout, n_cells=8)),
+        lambda bs, batch, layout: cdc_probe_append_ivf_layout(
+            bs, layout, batch.select("vec_id", "embedding"), k=3,
+            query_id_col="vec_id",
+        ),
     )
 
 
@@ -555,13 +498,12 @@ def streaming_ivf_pq_cdc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch trains the at-rest IVF-PQ layout (coarse codebook + per-sub
     residual PQ codebooks, both FIXED for the stream's life — the
     sidecar contract); each later batch is ADC-probed for its top-k
-    among all PRIOR vectors (``probe_ivf_pq_layout`` — the scan reads
-    vec_id + M code ints, never the embedding column) and then appended
-    through ``append_to_ivf_pq_layout``, which PQ-encodes the new rows
-    with the STORED codebooks (the r12 append leg; a plain append would
-    leave code_* null and the vectors would silently vanish from later
-    ADC results — the guard refuses it). Per-batch result deltas,
-    union-on-read, like its two siblings.
+    among all PRIOR vectors (the scan reads vec_id + M code ints, never
+    the embedding column) and then appended with its rows PQ-encoded
+    under the STORED codebooks (a plain append would leave code_* null
+    and the vectors would silently vanish from later ADC results — the
+    guard refuses it). Per-batch result deltas, union-on-read, like its
+    two siblings.
 
     Rows-only: the seeded k-means coarse codebook and the Lloyd-trained
     PQ codebooks are not reproducible in SQL — the
@@ -572,54 +514,20 @@ def streaming_ivf_pq_cdc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     / ``ivf_pq_portable``). Deterministic end-to-end given the fixed
     seed, so the driver's rows-only check is stable.
     """
-    import os
-
     from nbi_oedi_etl_spark.operators.ivf_layout import (
         cdc_probe_append_ivf_pq_layout,
         write_ivf_pq_layout,
     )
 
-    layout = tempfile.mkdtemp(prefix="ivfpq_cdc_layout_") + "/layout"
-    out_root = tempfile.mkdtemp(prefix="ivfpq_cdc_out_")
-    state = {"fitted": False}
-    empty_schema = "query_id long, vec_id long, cos_sim double, rank int"
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bs = batch_df.sparkSession
-        vecs = batch_df.select("vec_id", "embedding")
-        if not state["fitted"]:
-            if vecs.isEmpty():
-                res = bs.createDataFrame([], empty_schema).repartition(1)
-            else:
-                write_ivf_pq_layout(vecs, layout, n_cells=8, pq_m=4, pq_k=16)
-                state["fitted"] = True
-                res = bs.createDataFrame([], empty_schema).repartition(1)
-        else:
-            # r14 fused CDC step — see streaming_ivf_cdc_ann: one shared
-            # collect, driver-side assign, encode projection over the
-            # local relation, one sidecar read each per batch. r15: the
-            # result delta is written inside the fused step (§2.6
-            # overlap with the append write — see the IVF twin).
-            res = cdc_probe_append_ivf_pq_layout(
-                bs,
-                layout,
-                vecs,
-                k=3,
-                query_id_col="vec_id",
-                result_sink=lambda df: df.write.mode("overwrite").parquet(
-                    os.path.join(out_root, f"batch={batch_id}")
-                ),
+    return drain_layout_cdc(
+        spark, sf_dir, "embeddings", "vec_id", "ivfpq_cdc_", _ANN_CDC_SCHEMA,
+        _ivf_cdc_fit(
+            lambda vecs, layout: write_ivf_pq_layout(
+                vecs, layout, n_cells=8, pq_m=4, pq_k=16
             )
-            if res is not None:
-                return  # delta written by the sink above
-            res = bs.createDataFrame([], empty_schema).repartition(1)
-        res.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"batch={batch_id}")
-        )
-
-    s = drain_mod3_batches(
-        spark, sf_dir, "embeddings", "vec_id", apply_batch, "ivfpq_cdc_src_"
-    )
-    return s.read.parquet(out_root).select(
-        "query_id", "vec_id", "cos_sim", "rank"
+        ),
+        lambda bs, batch, layout: cdc_probe_append_ivf_pq_layout(
+            bs, layout, batch.select("vec_id", "embedding"), k=3,
+            query_id_col="vec_id",
+        ),
     )

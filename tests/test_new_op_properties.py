@@ -1177,9 +1177,10 @@ def test_cdc_fused_ivf_probe_append_matches_unfused(spark, tmp_path):
     ).collect()))
     il.append_to_ivf_layout(spark, d_unfused, batch)
 
-    fused = il.cdc_probe_append_ivf_layout(
+    fused, append = il.cdc_probe_append_ivf_layout(
         spark, d_fused, batch, k=4, query_id_col="vec_id"
     )
+    append()
     got = sorted(map(tuple, fused.collect()))
     assert got == want and len(got) > 0
 
@@ -1227,9 +1228,10 @@ def test_cdc_fused_ivf_pq_probe_append_matches_unfused(spark, tmp_path):
     ).collect()))
     il.append_to_ivf_pq_layout(spark, d_unfused, batch)
 
-    fused = il.cdc_probe_append_ivf_pq_layout(
+    fused, append = il.cdc_probe_append_ivf_pq_layout(
         spark, d_fused, batch, k=4, query_id_col="vec_id"
     )
+    append()
     got = sorted(map(tuple, fused.collect()))
     assert got == want and len(got) > 0
 

@@ -260,3 +260,33 @@ def test_python_datasource_partitions_and_determinism(spark):
     assert row["ts"] == python_datasource.BASE_DAY
     # projection-only read still yields full cardinality
     assert df.select("value").count() == 480
+
+
+def test_reference_etl_config_json_loads_with_unknown_keys():
+    """A reference-shaped ``etl_config`` carries settings this engine has
+    no use for (the reference's queue and watchdog knobs, a shuffle pin):
+    ``from_json`` drops them and keeps the job selections intact."""
+    import json
+
+    text = json.dumps({
+        "src_path": "s3://oedi-data-lake/nrel-pds-building-stock",
+        "dest_path": "s3://dest-bucket/etl",
+        "output_dir": "etl_output",
+        "idle_timeout_in_minutes": 5,
+        "max_listing_queue_size": 1000,
+        "shuffle_partitions": 32,
+        "job_specific": [
+            {"release_year": "2024", "release_name": "comstock_amy2018_release_1",
+             "state": "AK", "upgrades": [0, 1]},
+            {"release_year": "2024", "release_name": "comstock_amy2018_release_1",
+             "state": "CA", "upgrades": [0]},
+        ],
+    })
+    config = ETLConfig.from_json(text)
+    assert config.src_path == "s3://oedi-data-lake/nrel-pds-building-stock"
+    assert config.output_dir == "etl_output"
+    assert config.job_specific == [
+        JobSpec("2024", "comstock_amy2018_release_1", "AK", [0, 1]),
+        JobSpec("2024", "comstock_amy2018_release_1", "CA", [0]),
+    ]
+    assert ETLConfig.from_json(config.to_json()) == config
