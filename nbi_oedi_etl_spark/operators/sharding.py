@@ -6,66 +6,40 @@ data loaders, and shard boundaries must be reproducible).
 Shard assignment is a GLOBAL running total of token counts in a stable
 document order — a distributed prefix sum. The naive Spark expression
 (`sum().over(Window.orderBy(id))` with no partition key) moves the whole
-corpus into ONE task — the canonical window-function scale trap. The
-two-pass shape here is the textbook distributed scan:
-
-1. bucket documents by fixed-width id ranges (order-preserving);
-   per-bucket token totals are a tiny summary (|buckets| rows);
-2. exclusive-prefix-sum the summary to get each bucket's global offset
-   (the only global window, over the summary — broadcast back);
-3. per-bucket cumulative sums run fully parallel, shifted by the offset.
-
-At 100 TB: step 1/3 are one shuffle each on the bucket key; step 2 is
-O(buckets). The same shape serves any "global cumulative metric in key
-order" need (byte budgets, row numbering, manifest offsets).
+corpus into ONE task — the canonical window-function scale trap. Here it
+is the un-keyed two-pass spine (``skew.keyed_cumsum_two_pass`` with
+``key_col=None``): documents bucket by fixed-width id ranges
+(order-preserving), per-bucket cumsums run fully parallel, and the tiny
+per-bucket summary's exclusive prefix sum shifts each bucket by its
+global offset. Always two-pass: no dispatch count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nbi_oedi_etl_spark.operators.skew import keyed_cumsum_two_pass
 from nbi_oedi_etl_spark.operators.text import token_count
 
+#: Width (in doc_id units) of the order-preserving id buckets.
+_BUCKET_DOCS = 4096
 
-def token_budget_shards(
-    docs: DataFrame,
-    budget_tokens: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_width: int = 4096,
-) -> DataFrame:
+
+def token_budget_shards(docs: DataFrame, budget_tokens: int) -> DataFrame:
     """Assign each document to a token-budget shard: shard_id =
-    floor(exclusive-prefix-tokens / budget) in ascending id order (a doc
-    belongs to the shard its FIRST token lands in — next-fit packing, the
-    deterministic rule both engines can reproduce).
+    floor(exclusive-prefix-tokens / budget) in ascending doc_id order
+    (a doc belongs to the shard its FIRST token lands in — next-fit
+    packing, the deterministic rule both engines can reproduce). A NULL
+    doc_id sorts first, as in ``ORDER BY doc_id NULLS FIRST``.
 
     Output: (doc_id, n_tokens, cum_tokens, shard_id); ``cum_tokens`` is
     the inclusive running total.
     """
-    d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
-    ).withColumn("bucket", F.floor(F.col("doc_id") / bucket_width))
-    # tiny per-bucket summary → exclusive prefix sum (the single-partition
-    # window runs over |buckets| rows, not the corpus)
-    totals = d.groupBy("bucket").agg(F.sum("n_tokens").alias("bucket_tokens"))
-    w_excl = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "bucket",
-        F.coalesce(F.sum("bucket_tokens").over(w_excl), F.lit(0)).alias("offset"),
+    d = docs.select("doc_id", token_count(F.col("text")).cast("long").alias("n_tokens"))
+    d = keyed_cumsum_two_pass(
+        d, None, ["doc_id"], F.floor(F.col("doc_id") / _BUCKET_DOCS), "n_tokens",
+        out_col="cum_tokens",
     )
-    w_bucket = (
-        Window.partitionBy("bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        d.join(F.broadcast(offsets), "bucket")
-        .withColumn("cum_tokens", F.sum("n_tokens").over(w_bucket) + F.col("offset"))
-        .withColumn(
-            "shard_id",
-            F.floor((F.col("cum_tokens") - F.col("n_tokens")) / budget_tokens),
-        )
-        .select("doc_id", "n_tokens", "cum_tokens", "shard_id")
-    )
+    shard = F.floor((F.col("cum_tokens") - F.col("n_tokens")) / budget_tokens)
+    return d.select("doc_id", "n_tokens", "cum_tokens", shard.alias("shard_id"))

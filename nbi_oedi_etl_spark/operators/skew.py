@@ -3,15 +3,16 @@
 
 AQE's skew-join splitting handles most cases automatically
 (``spark.sql.adaptive.skewJoin.enabled``, on in session.py). These
-operators cover the aggregation-side cases AQE doesn't:
+operators cover the aggregation- and window-side cases AQE doesn't:
 
 - **salted two-phase aggregation**: a grouped agg where one key holds a
   huge share of rows (e.g. state=CA in the reference's lake) bottlenecks
   one reducer. Salting splits each key into N subkeys for a partial agg,
   then combines — two small shuffles instead of one stuck task.
-- **salted broadcast join**: replicate the small side N× with salt ids so
-  a skewed large side spreads across N tasks per hot key (only needed
-  when the join must shuffle; broadcast joins don't skew).
+- **the two-pass spine**: ordered windows (sessions, running sums,
+  ranks, cumsums) keyed on a hot key — or un-keyed, where the "key" is
+  the whole table — run as one bucket-offset prefix sum
+  (``_bucketed_prefix``) whose parallelism unit is (key, bucket).
 
 Only algebraic aggregates (sum/count/min/max → avg) can be two-phased;
 count-distinct needs the exact dual-shuffle Spark already plans.
@@ -20,9 +21,9 @@ count-distinct needs the exact dual-shuffle Spark already plans.
 from __future__ import annotations
 
 import logging
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
@@ -54,48 +55,20 @@ def salted_grouped_sum(
         )
     )
     return phase1.groupBy(*[F.col(f"`{c}`") for c in group_cols]).agg(
-        *[F.sum(F.col(f"__s_{c}")).alias(f"{c}_sum") for c in sum_cols],
+        *[F.sum(F.col(f"`__s_{c}`")).alias(f"{c}_sum") for c in sum_cols],
         F.sum("__n").alias(count_alias),
     )
 
 
-def _stitch_spine(
-    rows: DataFrame, spine: DataFrame, key_col: str, broadcast_spine: bool
-) -> DataFrame:
-    """Join the spine back to the fact rows on (key, bucket).
-
-    NULL-SAFE equality: a NULL key (or a NULL bucket from a NULL
-    timestamp) is a legitimate window partition that the naive
-    single-window forms keep, so an inner equi-join that drops NULL keys
-    would silently lose those rows and make spine-vs-naive results
-    dispatch-dependent (r9 self-review — reproduced with a NULL-keyed
-    corpus). ``<=>`` keys are supported by broadcast hash joins, so the
-    stitch plan shape is unchanged.
-
-    Join strategy — ``broadcast_spine=False`` (the default since r9,
-    ADVICE r8): no hint; AQE sizes the spine AT RUNTIME (it is the
-    output of a shuffle stage) and broadcasts it when it fits
-    ``autoBroadcastJoinThreshold``, falling back to a shuffle join on
-    (key, bucket) when extreme key cardinality makes the spine (distinct
-    keys × non-empty buckets) outgrow the broadcast/driver budget. The
-    fallback stays skew-free: the hot key is still bucket-split on the
-    fact side. ``broadcast_spine=True`` forces the broadcast hint — use
-    when the key universe is known-bounded and you want the
-    no-second-fact-shuffle plan pinned regardless of estimates.
-    """
-    sp = spine.withColumnRenamed(key_col, "__sk").withColumnRenamed(
-        "__bucket", "__sb"
-    )
-    if broadcast_spine:
-        sp = F.broadcast(sp)
-    cond = F.col(f"`{key_col}`").eqNullSafe(F.col("__sk")) & F.col(
-        "__bucket"
-    ).eqNullSafe(F.col("__sb"))
-    return rows.join(sp, cond, "inner").drop("__sk", "__sb")
+#: Columns the bucketed-prefix core builds and drops.
+_SPINE_INTERNALS = frozenset({"__bucket", "__wval", "__total", "__prefix", "__sk", "__sb"})
 
 
 def _check_spine_inputs(
-    df: DataFrame, internals: set[str], bucket_seconds: float, gap_seconds: float = 0.0
+    df: DataFrame,
+    internals: frozenset[str],
+    bucket_seconds: float = 1.0,
+    gap_seconds: float = 0.0,
 ) -> None:
     """The spine operators build-and-drop internal columns; a same-named
     input column would be silently destroyed (the ingest_untrusted
@@ -109,6 +82,95 @@ def _check_spine_inputs(
         raise ValueError(f"gap_seconds must be non-negative, got {gap_seconds}")
 
 
+def _keys(key_col: str | None) -> list[Column]:
+    return [] if key_col is None else [F.col(f"`{key_col}`")]
+
+
+def _in_bucket(key_col: str | None, order_cols: Sequence[Column]) -> WindowSpec:
+    """The fact-row window: partitioned on (key, bucket), never the key alone."""
+    return Window.partitionBy(*_keys(key_col), "__bucket").orderBy(*order_cols)
+
+
+def _stitch_spine(rows: DataFrame, spine: DataFrame, key_col: str | None) -> DataFrame:
+    """Join the spine back to the fact rows on (key, bucket) — on the
+    bucket alone when un-keyed.
+
+    NULL-SAFE equality: a NULL key (or a NULL bucket from a NULL
+    timestamp or id) is a legitimate window partition that the naive
+    single-window forms keep, so an inner equi-join that drops NULL keys
+    would silently lose those rows and make spine-vs-naive results
+    dispatch-dependent. ``<=>`` keys are supported by broadcast hash
+    joins, so the stitch plan shape is unchanged.
+
+    No join hint: AQE sizes the spine AT RUNTIME (it is the output of a
+    shuffle stage) and broadcasts it when it fits
+    ``autoBroadcastJoinThreshold``, falling back to a shuffle join on
+    (key, bucket) when extreme key cardinality makes the spine (distinct
+    keys × non-empty buckets) outgrow the broadcast/driver budget. The
+    fallback stays skew-free: the hot key is still bucket-split on the
+    fact side.
+    """
+    sp = spine.withColumnRenamed("__bucket", "__sb")
+    cond = F.col("__bucket").eqNullSafe(F.col("__sb"))
+    if key_col is not None:
+        sp = sp.withColumnRenamed(key_col, "__sk")
+        cond = F.col(f"`{key_col}`").eqNullSafe(F.col("__sk")) & cond
+    return rows.join(sp, cond, "inner").drop("__sk", "__sb")
+
+
+def _bucketed_prefix(
+    df: DataFrame,
+    key_col: str | None,
+    bucket: Column,
+    order_cols: Sequence[Column],
+    within: Callable[[WindowSpec], Column],
+    total: Column,
+    out_col: str,
+    *,
+    spine_aggs: Sequence[Column] = (),
+    spine: Callable[[DataFrame, WindowSpec], DataFrame] | None = None,
+) -> DataFrame:
+    """The one bucket-offset prefix sum (Blelloch, "Prefix Sums and Their
+    Applications", 1990) behind every two-pass form:
+
+    1. WITHIN — rows shuffle once to (key, bucket); ``within(w)`` is each
+       row's value over ``w``, the window partitioned on (key, bucket)
+       and ordered by ``order_cols``. A key holding 90% of all rows
+       spreads over its non-empty buckets instead of one task.
+    2. SPINE — one row per (key, non-empty bucket) carrying the aggregate
+       ``total``; ``__prefix`` is its exclusive sum over the key's
+       earlier buckets, 0 for the first (coalesced to the sum's type).
+       The spine is bounded by the bucket universe, not the row count.
+       ``spine(sp, by_key)``, when given, rewrites the grouped spine
+       (``total`` plus the named ``spine_aggs``) before the prefix; it
+       must leave ``__total``, and any other column it keeps travels to
+       the rows for the caller to use and drop.
+    3. STITCH — the spine joins back null-safely (``_stitch_spine``);
+       ``out_col`` = ``__prefix`` + the row's within value.
+
+    ``key_col=None`` is the un-keyed (global) form: the fact window
+    partitions on the bucket alone and the prefix window runs un-keyed
+    over the spine rows — one task, but over |buckets| rows.
+
+    Caller contract: ``bucket`` is monotone non-decreasing in
+    ``order_cols`` within each key, else rows land in prefix buckets out
+    of order and the result is silently wrong.
+    """
+    keys = _keys(key_col)
+    rows = df.withColumn("__bucket", bucket)
+    rows = rows.withColumn("__wval", within(_in_bucket(key_col, order_cols)))
+    by_key = Window.partitionBy(*keys).orderBy("__bucket")
+    sp = rows.groupBy(*keys, "__bucket").agg(total.alias("__total"), *spine_aggs)
+    if spine is not None:
+        sp = spine(sp, by_key)
+    prefix = F.sum("__total").over(by_key.rowsBetween(Window.unboundedPreceding, -1))
+    sp = sp.withColumn("__prefix", F.coalesce(prefix, F.lit(0))).drop("__total")
+    out = _stitch_spine(rows, sp, key_col)
+    return out.withColumn(out_col, F.col("__prefix") + F.col("__wval")).drop(
+        "__bucket", "__wval", "__prefix"
+    )
+
+
 def _epoch_seconds(df: DataFrame, ts_col: str) -> Column:
     """Timestamp-or-numeric → epoch seconds as DOUBLE. TIMESTAMP_NTZ has
     no direct double cast under ANSI — route it through TIMESTAMP (the
@@ -120,37 +182,31 @@ def _epoch_seconds(df: DataFrame, ts_col: str) -> Column:
     return col.cast("double")
 
 
+def _time_bucket(sec: Column, bucket_seconds: float) -> Column:
+    return F.floor(sec / F.lit(float(bucket_seconds)))
+
+
 def sessionize_two_pass_spine(
     df: DataFrame,
-    key_col: str,
+    key_col: str | None,
     ts_col: str,
     gap_seconds: float,
     bucket_seconds: float = 3600.0,
     session_col: str = "session_id",
-    broadcast_spine: bool = False,
 ) -> DataFrame:
     """Gap-timeout sessionization immune to hot-key skew — the "two-pass
     spine" mitigation SCALE.md documents for the per-key window class.
 
     The naive sessionizer (``Window.partitionBy(key).orderBy(ts)``) puts
     ALL of a key's rows on one task: a frac-hot entity serializes frac of
-    the stage (the frac×P imbalance bound the skew probe measures). This
-    operator keeps the parallelism unit at (key, time-bucket) instead:
-
-    1. WITHIN pass — rows shuffle once to (key, bucket); a within-bucket
-       window computes gap flags and per-bucket running start counts.
-       A 90%-hot key spreads over |time-range|/bucket_seconds tasks.
-    2. SPINE — one row per (key, non-empty bucket): first/last ts and
-       the within-start count. Size is bounded by the TIME RANGE, not the
-       row count, so the per-key spine window (stitch decisions + prefix
-       sums of session starts) is trivially small even for a key holding
-       billions of rows.
-    3. STITCH — the spine broadcast-joins back on (key, bucket): no
-       second shuffle of the fact rows. A bucket's first event starts a
-       session iff the gap from the PREVIOUS NON-EMPTY bucket's last
-       event exceeds the timeout (correct across empty buckets);
-       ``session_id`` = spine prefix + within-bucket running count —
-       identical numbering to the naive single-window form.
+    the stage (the frac×P imbalance bound the skew probe measures). Here
+    the within-bucket pass flags gap starts and counts them
+    (``__wflag``), the spine carries each bucket's first/last timestamp,
+    and a bucket's first event starts a session iff the gap from the
+    PREVIOUS NON-EMPTY bucket's last event exceeds the timeout (correct
+    across empty buckets). The core's prefix runs over each bucket's
+    starts; ``session_id`` = prefix + first-row start + within-bucket
+    running count — identical numbering to the naive single-window form.
 
     Exactness: equal timestamps can never split a session (gap 0 ≤
     timeout), so the result is order-stable under ties; equivalence with
@@ -158,21 +214,18 @@ def sessionize_two_pass_spine(
     clean AND 90%-hot grown corpora. Sessions are numbered 1..N per key
     in time order.
     """
-    from pyspark.sql import Window
-
     _check_spine_inputs(
         df,
-        {"__bucket", "__sec", "__wflag", "__wcum", "__fstart", "__prefix",
-         "__sk", "__sb"},
+        _SPINE_INTERNALS | {"__sec", "__wflag", "__first", "__last", "__fstart"},
         bucket_seconds,
         gap_seconds,
     )
     sec = _epoch_seconds(df, ts_col)
-    bucket = F.floor(sec / F.lit(float(bucket_seconds))).alias("__bucket")
-    rows = df.withColumn("__bucket", bucket).withColumn("__sec", sec)
-
-    in_bucket = Window.partitionBy(f"`{key_col}`", "__bucket").orderBy("__sec")
-    prev_sec = F.lag("__sec").over(in_bucket)
+    rows = df.withColumn("__sec", sec).withColumn(
+        "__bucket", _time_bucket(F.col("__sec"), bucket_seconds)
+    )
+    in_bucket = _in_bucket(key_col, [F.col("__sec")])
+    gap = F.lit(float(gap_seconds))
     # Within-bucket start flag; a bucket's FIRST row is resolved by the
     # spine. NULL-timestamp rows (all land in the NULL bucket, ordered
     # first) replicate the naive form's semantics exactly: ``lag(sec)``
@@ -185,71 +238,51 @@ def sessionize_two_pass_spine(
     # it also sees prev_last NULL → fstart=1, matching naive's first
     # non-null row).
     has_prev = F.lag(F.lit(1)).over(in_bucket).isNotNull()
-    within_flag = F.when(
-        has_prev
-        & (
-            F.col("__sec").isNull()
-            | (F.col("__sec") - prev_sec > F.lit(float(gap_seconds)))
-        ),
-        1,
-    ).otherwise(0)
-    rows = rows.withColumn("__wflag", within_flag).withColumn(
-        "__wcum",
-        F.sum("__wflag").over(
-            in_bucket.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
+    prev_gap = F.col("__sec") - F.lag("__sec").over(in_bucket)
+    rows = rows.withColumn(
+        "__wflag",
+        F.when(has_prev & (F.col("__sec").isNull() | (prev_gap > gap)), 1).otherwise(0),
     )
 
-    spine = rows.groupBy(f"`{key_col}`", "__bucket").agg(
-        F.min("__sec").alias("__first"),
-        F.max("__sec").alias("__last"),
-        F.sum("__wflag").alias("__nwithin"),
-    )
-    by_key = Window.partitionBy(f"`{key_col}`").orderBy("__bucket")
-    prev_last = F.lag("__last").over(by_key)
-    first_is_start = (
-        prev_last.isNull()
-        | (F.col("__first") - prev_last > F.lit(float(gap_seconds)))
-    ).cast("int")
-    spine = spine.withColumn("__fstart", first_is_start).withColumn(
-        "__starts", F.col("__fstart") + F.col("__nwithin")
-    ).withColumn(
-        "__prefix",
-        F.coalesce(
-            F.sum("__starts").over(
-                by_key.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select(f"`{key_col}`", "__bucket", "__fstart", "__prefix")
+    def starts(sp: DataFrame, by_key: WindowSpec) -> DataFrame:
+        prev_last = F.lag("__last").over(by_key)
+        first_is_start = prev_last.isNull() | (F.col("__first") - prev_last > gap)
+        return (
+            sp.withColumn("__fstart", first_is_start.cast("int"))
+            .withColumn("__total", F.col("__fstart") + F.col("__total"))
+            .drop("__first", "__last")
+        )
 
-    out = _stitch_spine(rows, spine, key_col, broadcast_spine).withColumn(
+    out = _bucketed_prefix(
+        rows,
+        key_col,
+        F.col("__bucket"),
+        [F.col("__sec")],
+        lambda w: F.sum("__wflag").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+        F.sum("__wflag"),
         session_col,
-        (F.col("__prefix") + F.col("__fstart") + F.col("__wcum")).cast("long"),
+        spine_aggs=[F.min("__sec").alias("__first"), F.max("__sec").alias("__last")],
+        spine=starts,
     )
-    return out.drop("__bucket", "__sec", "__wflag", "__wcum",
-                    "__fstart", "__prefix")
+    session_id = (F.col(f"`{session_col}`") + F.col("__fstart")).cast("long")
+    return out.withColumn(session_col, session_id).drop("__sec", "__wflag", "__fstart")
 
 
 def running_sum_two_pass_spine(
     df: DataFrame,
-    key_col: str,
+    key_col: str | None,
     ts_col: str,
     value_col: str,
     bucket_seconds: float = 3600.0,
     out_col: str = "running_sum",
-    broadcast_spine: bool = False,
 ) -> DataFrame:
-    """Per-key running sum over time immune to hot-key skew — the second
-    member of the two-pass-spine family (``sessionize_two_pass_spine``
-    covers gap flags; this covers the cumulative/SCD2-style running
-    aggregates the skew probe's window class times).
-
-    Same shape: one fact shuffle to (key, time-bucket) for a
-    within-bucket running sum, a time-range-bounded spine carrying each
-    bucket's total for the per-key prefix sums, and a broadcast join
-    back. ``out_col`` = earlier-bucket prefix + within-bucket running
-    sum.
+    """Per-key running sum over time immune to hot-key skew: a
+    within-bucket RANGE-frame ``sum`` plus the core's prefix of bucket
+    totals. ``key_col=None`` is the GLOBAL running sum
+    (``Window.orderBy(ts)`` with no partition moves every row through one
+    task; here the parallelism unit is the time bucket).
 
     Tie semantics: both this and the naive form use the RANGE frame
     (all rows with ts' ≤ ts included), so equal timestamps share one
@@ -258,109 +291,52 @@ def running_sum_two_pass_spine(
     engine. Equivalence with the naive single-window RANGE form is
     pinned in tests/test_quarantine_skew.py.
     """
-    from pyspark.sql import Window
-
-    _check_spine_inputs(
-        df,
-        {"__bucket", "__sec", "__wsum", "__total", "__prefix", "__sk", "__sb"},
-        bucket_seconds,
-    )
+    _check_spine_inputs(df, _SPINE_INTERNALS, bucket_seconds)
     sec = _epoch_seconds(df, ts_col)
-    bucket = F.floor(sec / F.lit(float(bucket_seconds))).alias("__bucket")
-    rows = df.withColumn("__bucket", bucket).withColumn("__sec", sec)
-
-    in_bucket = (
-        Window.partitionBy(f"`{key_col}`", "__bucket")
-        .orderBy("__sec")
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    rows = rows.withColumn(
-        "__wsum", F.sum(F.col(f"`{value_col}`")).over(in_bucket)
-    )
-
-    spine = rows.groupBy(f"`{key_col}`", "__bucket").agg(
-        F.sum(f"`{value_col}`").alias("__total")
-    )
-    by_key = Window.partitionBy(f"`{key_col}`").orderBy("__bucket")
-    spine = spine.withColumn(
-        "__prefix",
-        F.coalesce(
-            F.sum("__total").over(
-                by_key.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),  # coerces to the sum's type (long or double)
+    value = F.col(f"`{value_col}`")
+    return _bucketed_prefix(
+        df,
+        key_col,
+        _time_bucket(sec, bucket_seconds),
+        [sec],
+        lambda w: F.sum(value).over(
+            w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
         ),
-    ).select(f"`{key_col}`", "__bucket", "__prefix")
-
-    out = _stitch_spine(rows, spine, key_col, broadcast_spine).withColumn(
-        out_col, F.col("__prefix") + F.col("__wsum")
+        F.sum(value),
+        out_col,
     )
-    return out.drop("__bucket", "__sec", "__wsum", "__prefix")
 
 
 def rank_two_pass_spine(
     df: DataFrame,
-    key_col: str,
+    key_col: str | None,
     ts_col: str,
     bucket_seconds: float = 3600.0,
     out_col: str = "rank",
-    broadcast_spine: bool = False,
 ) -> DataFrame:
-    """Per-key RANK() by time immune to hot-key skew — third member of
-    the two-pass-spine family (sessions, running sums, ranking: together
-    the building blocks of the probe's window class, including
-    top-k-per-group via a rank filter).
+    """Per-key SQL RANK() by time immune to hot-key skew (top-k-per-group
+    is a rank filter on it); ``key_col=None`` is the GLOBAL rank —
+    position in the globally sorted stream.
 
     rank(e) = #rows of the key strictly earlier than e, plus 1 — the
     tie-stable SQL RANK (ties share a rank; ROW_NUMBER is order-dependent
     under ties and CANNOT be made deterministic without a tiebreaker, so
-    it is deliberately not offered). Within a bucket the strict count is
-    ``count(≤) − count(=)`` (RANGE frame minus the tie-group size); the
-    spine carries per-bucket row counts for the earlier-bucket prefix.
-    Equal timestamps always share one bucket, so prefix rows are strictly
-    earlier by construction.
+    it is deliberately not offered). Within a bucket that is ``rank()``
+    over the bucket's rows; the spine counts each bucket's rows for the
+    earlier-bucket prefix. Equal timestamps always share one bucket, so
+    prefix rows are strictly earlier by construction.
     """
-    from pyspark.sql import Window
-
-    _check_spine_inputs(
-        df,
-        {"__bucket", "__sec", "__le", "__ties", "__cnt", "__prefix",
-         "__sk", "__sb"},
-        bucket_seconds,
-    )
+    _check_spine_inputs(df, _SPINE_INTERNALS, bucket_seconds)
     sec = _epoch_seconds(df, ts_col)
-    bucket = F.floor(sec / F.lit(float(bucket_seconds))).alias("__bucket")
-    rows = df.withColumn("__bucket", bucket).withColumn("__sec", sec)
-
-    w_le = (
-        Window.partitionBy(f"`{key_col}`", "__bucket")
-        .orderBy("__sec")
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_eq = Window.partitionBy(f"`{key_col}`", "__bucket", "__sec")
-    rows = rows.withColumn("__le", F.count(F.lit(1)).over(w_le)).withColumn(
-        "__ties", F.count(F.lit(1)).over(w_eq)
-    )
-
-    spine = rows.groupBy(f"`{key_col}`", "__bucket").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    by_key = Window.partitionBy(f"`{key_col}`").orderBy("__bucket")
-    spine = spine.withColumn(
-        "__prefix",
-        F.coalesce(
-            F.sum("__cnt").over(by_key.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    ).select(f"`{key_col}`", "__bucket", "__prefix")
-
-    out = _stitch_spine(rows, spine, key_col, broadcast_spine).withColumn(
+    return _bucketed_prefix(
+        df,
+        key_col,
+        _time_bucket(sec, bucket_seconds),
+        [sec],
+        lambda w: F.rank().over(w),
+        F.count(F.lit(1)),
         out_col,
-        (F.col("__prefix") + F.col("__le") - F.col("__ties") + F.lit(1)).cast(
-            "long"
-        ),
     )
-    return out.drop("__bucket", "__sec", "__le", "__ties", "__prefix")
 
 
 def naive_rank(
@@ -368,8 +344,6 @@ def naive_rank(
 ) -> DataFrame:
     """Single-window RANK() by time — the equivalence oracle for
     ``rank_two_pass_spine``."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy(f"`{key_col}`").orderBy(_epoch_seconds(df, ts_col))
     return df.withColumn(out_col, F.rank().over(w).cast("long"))
 
@@ -383,8 +357,6 @@ def naive_running_sum(
 ) -> DataFrame:
     """Single-window RANGE-frame running sum — the equivalence oracle for
     ``running_sum_two_pass_spine`` and the right choice with no hot key."""
-    from pyspark.sql import Window
-
     sec = _epoch_seconds(df, ts_col)
     w = (
         Window.partitionBy(f"`{key_col}`")
@@ -404,8 +376,6 @@ def naive_sessionize(
     """Single-window gap sessionizer — the textbook form (one per-key sort
     on one task). The equivalence oracle for ``sessionize_two_pass_spine``
     and the right choice when no key is hot."""
-    from pyspark.sql import Window
-
     sec = _epoch_seconds(df, ts_col)
     w = Window.partitionBy(f"`{key_col}`").orderBy(sec)
     flag = F.when(
@@ -421,133 +391,21 @@ def naive_sessionize(
     )
 
 
-#: Measured naive↔spine crossover (SCALE.md "two-pass spine, implemented
-#: and measured", local[32], median-of-3, forced window evaluation): at
-#: 0.9M rows on one key the two forms are at parity (1.48 s vs 1.46 s);
-#: by 20M rows on one key the spine wins 3.0–4.15×. Below ~1M rows/key
-#: the naive single-window form is the right plan (one shuffle, no join).
-SPINE_CROSSOVER_ROWS_PER_KEY = 1_000_000
-
-
-def _max_rows_per_key(df: DataFrame, key_col: str) -> int:
-    """Hottest-key row count: one key-column-pruned aggregate with
-    map-side partial counts (the shuffle carries one row per distinct key
-    per map task). This is the dispatch probe — a deliberate extra pass,
-    cheap relative to the window work it sizes; pass the count in via the
-    front doors' ``max_rows_per_key`` to skip it when already known."""
-    row = (
-        df.select(F.col(f"`{key_col}`"))
-        .groupBy(f"`{key_col}`")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(F.max("__n").alias("__hot"))
-        .first()
-    )
-    return int(row["__hot"] or 0)
-
-
-def _dispatch_spine(
-    df: DataFrame,
-    key_col: str,
-    crossover: int,
-    max_rows_per_key: int | None,
-) -> bool:
-    probed = max_rows_per_key is None
-    hot = _max_rows_per_key(df, key_col) if probed else max_rows_per_key
-    # The probe is an EAGER Spark job inside a transform-shaped API —
-    # log the decision so the surprise is at least visible (ADVICE r9).
-    _log.info(
-        "spine dispatch on %r: max_rows_per_key=%d (%s) crossover=%d -> %s",
-        key_col,
-        hot,
-        "probed" if probed else "caller-supplied",
-        crossover,
-        "two-pass spine" if hot >= crossover else "naive window",
-    )
-    return hot >= crossover
-
-
-def sessionize(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    gap_seconds: float,
-    bucket_seconds: float = 3600.0,
-    session_col: str = "session_id",
-    crossover: int = SPINE_CROSSOVER_ROWS_PER_KEY,
-    max_rows_per_key: int | None = None,
-) -> DataFrame:
-    """Gap-timeout sessionization front door (VERDICT r8 optional task):
-    measures the hottest key's row count (one cheap key-pruned aggregate,
-    skipped when ``max_rows_per_key`` is supplied) and picks the naive
-    single-window form below the measured ~1M rows/key crossover or the
-    hot-key-immune two-pass spine at/above it — users get the mitigation
-    without knowing it exists. Both forms produce identical numbering
-    (equivalence pinned in tests/test_quarantine_skew.py)."""
-    if _dispatch_spine(df, key_col, crossover, max_rows_per_key):
-        return sessionize_two_pass_spine(
-            df, key_col, ts_col, gap_seconds, bucket_seconds, session_col
-        )
-    return naive_sessionize(df, key_col, ts_col, gap_seconds, session_col)
-
-
-def running_sum(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    bucket_seconds: float = 3600.0,
-    out_col: str = "running_sum",
-    crossover: int = SPINE_CROSSOVER_ROWS_PER_KEY,
-    max_rows_per_key: int | None = None,
-) -> DataFrame:
-    """Per-key running-sum front door; see ``sessionize`` for the
-    dispatch contract (RANGE-frame tie semantics either way)."""
-    if _dispatch_spine(df, key_col, crossover, max_rows_per_key):
-        return running_sum_two_pass_spine(
-            df, key_col, ts_col, value_col, bucket_seconds, out_col
-        )
-    return naive_running_sum(df, key_col, ts_col, value_col, out_col)
-
-
-def rank_by_time(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    bucket_seconds: float = 3600.0,
-    out_col: str = "rank",
-    crossover: int = SPINE_CROSSOVER_ROWS_PER_KEY,
-    max_rows_per_key: int | None = None,
-) -> DataFrame:
-    """Per-key SQL-RANK-by-time front door; see ``sessionize`` for the
-    dispatch contract (tie-stable RANK either way)."""
-    if _dispatch_spine(df, key_col, crossover, max_rows_per_key):
-        return rank_two_pass_spine(df, key_col, ts_col, bucket_seconds, out_col)
-    return naive_rank(df, key_col, ts_col, out_col)
-
-
 def keyed_cumsum_two_pass(
     df: DataFrame,
-    key_col: str,
+    key_col: str | None,
     order_cols: Sequence[str],
     bucket_col: Column,
     value_col: str,
     out_col: str = "cum_sum",
     include_current: bool = True,
-    broadcast_spine: bool = False,
 ) -> DataFrame:
     """Per-key cumulative sum over an ARBITRARY monotone order, immune to
-    hot-key skew — the generalization of ``running_sum_two_pass_spine``
-    from "ordered by time, bucketed by time range" to "ordered by any
-    column tuple, bucketed by any caller-supplied monotone coarsening"
-    (VERDICT r10 task 2: the packing/budget cumsums order by ``doc_id``
-    and ``(md5, doc_id)``, not by a timestamp).
-
-    Same three-stage shape as the timestamp form: one fact shuffle to
-    (key, bucket) for a within-bucket ROWS-frame cumsum, a spine of
-    per-bucket totals for the earlier-bucket prefix offsets (size bounded
-    by the bucket universe, not the row count), and the null-safe stitch
-    join back. A key holding 90% of all rows spreads over its non-empty
-    buckets instead of one task.
+    hot-key skew: a within-bucket ROWS-frame ``sum`` plus the core's
+    prefix of bucket totals, for orders that are not a timestamp (the
+    packing/budget cumsums order by ``doc_id`` and ``(md5, doc_id)``).
+    ``key_col=None`` is the GLOBAL cumsum (with value 1, a global
+    row_number).
 
     Caller contract (checked where cheap, documented where not):
 
@@ -567,58 +425,36 @@ def keyed_cumsum_two_pass(
     "tokens before this doc" quantity the concat-and-cut packers need),
     coalesced to 0 for each key's first row.
     """
-    from pyspark.sql import Window
-
-    _check_spine_inputs(
-        df, {"__bucket", "__wsum", "__total", "__prefix", "__sk", "__sb"}, 1.0
-    )
-    rows = df.withColumn("__bucket", bucket_col)
-
+    _check_spine_inputs(df, _SPINE_INTERNALS)
     upper = Window.currentRow if include_current else -1
-    in_bucket = (
-        Window.partitionBy(f"`{key_col}`", "__bucket")
-        .orderBy(*[F.col(f"`{c}`") for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, upper)
-    )
-    rows = rows.withColumn(
-        "__wsum", F.coalesce(F.sum(F.col(f"`{value_col}`")).over(in_bucket), F.lit(0))
-    )
-
-    spine = rows.groupBy(f"`{key_col}`", "__bucket").agg(
-        F.sum(f"`{value_col}`").alias("__total")
-    )
-    by_key = Window.partitionBy(f"`{key_col}`").orderBy("__bucket")
-    spine = spine.withColumn(
-        "__prefix",
-        F.coalesce(
-            F.sum("__total").over(
-                by_key.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
+    value = F.col(f"`{value_col}`")
+    return _bucketed_prefix(
+        df,
+        key_col,
+        bucket_col,
+        [F.col(f"`{c}`") for c in order_cols],
+        lambda w: F.coalesce(
+            F.sum(value).over(w.rowsBetween(Window.unboundedPreceding, upper)), F.lit(0)
         ),
-    ).select(f"`{key_col}`", "__bucket", "__prefix")
-
-    out = _stitch_spine(rows, spine, key_col, broadcast_spine).withColumn(
-        out_col, F.col("__prefix") + F.col("__wsum")
+        F.sum(value),
+        out_col,
     )
-    return out.drop("__bucket", "__wsum", "__prefix")
 
 
 def naive_keyed_cumsum(
     df: DataFrame,
-    key_col: str,
+    key_col: str | None,
     order_cols: Sequence[str],
     value_col: str,
     out_col: str = "cum_sum",
     include_current: bool = True,
 ) -> DataFrame:
     """Single-window ROWS-frame keyed cumsum — the equivalence oracle for
-    ``keyed_cumsum_two_pass`` and the right plan when no key is hot."""
-    from pyspark.sql import Window
-
+    ``keyed_cumsum_two_pass`` and the right plan when no key is hot
+    (``key_col=None``: the direct global window, one task)."""
     upper = Window.currentRow if include_current else -1
     w = (
-        Window.partitionBy(f"`{key_col}`")
+        Window.partitionBy(*_keys(key_col))
         .orderBy(*[F.col(f"`{c}`") for c in order_cols])
         .rowsBetween(Window.unboundedPreceding, upper)
     )
@@ -627,169 +463,67 @@ def naive_keyed_cumsum(
     )
 
 
+#: Measured naive↔spine crossover (SCALE.md "two-pass spine, implemented
+#: and measured", local[32], median-of-3, forced window evaluation): at
+#: 0.9M rows on one key the two forms are at parity (1.48 s vs 1.46 s);
+#: by 20M rows on one key the spine wins 3.0–4.15×. Below ~1M rows/key
+#: the naive single-window form is the right plan (one shuffle, no join).
+SPINE_CROSSOVER_ROWS_PER_KEY = 1_000_000
+
+
+def _max_rows_per_key(df: DataFrame, key_col: str | None) -> int:
+    """Hottest-key row count (the row count when un-keyed): one
+    key-column-pruned aggregate with map-side partial counts (the shuffle
+    carries one row per distinct key per map task). This is the dispatch
+    probe — a deliberate extra pass, cheap relative to the window work it
+    sizes; pass ``max_rows_per_key`` to skip it when already known."""
+    if key_col is None:
+        return df.count()
+    row = (
+        df.select(F.col(f"`{key_col}`"))
+        .groupBy(f"`{key_col}`")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(F.max("__n").alias("__hot"))
+        .first()
+    )
+    return int(row["__hot"] or 0)
+
+
 def keyed_cumsum(
     df: DataFrame,
-    key_col: str,
+    key_col: str | None,
     order_cols: Sequence[str],
     bucket_col: Column,
     value_col: str,
     out_col: str = "cum_sum",
     include_current: bool = True,
-    crossover: int = SPINE_CROSSOVER_ROWS_PER_KEY,
     max_rows_per_key: int | None = None,
 ) -> DataFrame:
-    """Keyed-cumsum front door; see ``sessionize`` for the dispatch
-    contract. Below the measured ~1M rows/key crossover the naive
+    """Keyed-cumsum front door: measures the hottest key's row count (the
+    row count when ``key_col`` is None; skipped when ``max_rows_per_key``
+    is supplied). Below the measured ~1M rows/key crossover the naive
     single-window form runs (one shuffle, no join); at/above it the
     two-pass spine keeps the parallelism unit at (key, bucket) — a
     90%-hot source in a packing mixture no longer serializes the stage.
     Both branches produce identical values (equivalence pinned in
     tests/test_quarantine_skew.py on balanced AND hot-source corpora)."""
-    if _dispatch_spine(df, key_col, crossover, max_rows_per_key):
+    probed = max_rows_per_key is None
+    hot = _max_rows_per_key(df, key_col) if probed else max_rows_per_key
+    two_pass = hot >= SPINE_CROSSOVER_ROWS_PER_KEY
+    # The probe is an EAGER Spark job inside a transform-shaped API —
+    # log the decision so the surprise is at least visible.
+    _log.info(
+        "spine dispatch on %r: max_rows_per_key=%d (%s), crossover %d -> %s",
+        key_col,
+        hot,
+        "probed" if probed else "caller-supplied",
+        SPINE_CROSSOVER_ROWS_PER_KEY,
+        "two-pass spine" if two_pass else "naive window",
+    )
+    if two_pass:
         return keyed_cumsum_two_pass(
-            df, key_col, order_cols, bucket_col, value_col, out_col,
-            include_current,
+            df, key_col, order_cols, bucket_col, value_col, out_col, include_current
         )
     return naive_keyed_cumsum(
         df, key_col, order_cols, value_col, out_col, include_current
     )
-
-
-#: Synthetic constant key the global (un-keyed) two-pass forms run the
-#: keyed spine under; reserved like the other spine internals.
-_GLOBAL_KEY = "__gkey"
-
-
-def global_cumsum(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    bucket_col: Column,
-    value_col: str,
-    out_col: str = "cum_sum",
-    include_current: bool = True,
-    crossover: int = SPINE_CROSSOVER_ROWS_PER_KEY,
-    total_rows: int | None = None,
-) -> DataFrame:
-    """GLOBAL cumulative sum over an arbitrary UNIQUE order tuple — the
-    un-keyed sibling of ``keyed_cumsum`` (with value 1 it is a global
-    row_number). ``Window.orderBy(...)`` with no partition moves every
-    row through one task; at/above the crossover this runs the
-    generalized two-pass spine under a constant synthetic key with the
-    caller's monotone ``bucket_col`` as the parallelism unit, below it
-    the direct window (one exchange, no join). Pass ``total_rows`` when
-    the caller already counted the frame (skips the dispatch count).
-
-    Same caller contract as ``keyed_cumsum_two_pass``: ``bucket_col``
-    monotone non-decreasing in the order tuple, order tuple unique.
-    """
-    from pyspark.sql import Window
-
-    n = df.count() if total_rows is None else total_rows
-    _log.info(
-        "global cumsum dispatch: rows=%d (%s) crossover=%d -> %s",
-        n,
-        "counted" if total_rows is None else "caller-supplied",
-        crossover,
-        "two-pass spine" if n >= crossover else "direct window",
-    )
-    if n >= crossover:
-        if _GLOBAL_KEY in df.columns:
-            raise ValueError(f"input column collides with {_GLOBAL_KEY!r}")
-        out = keyed_cumsum_two_pass(
-            df.withColumn(_GLOBAL_KEY, F.lit(1)),
-            _GLOBAL_KEY,
-            order_cols,
-            bucket_col,
-            value_col,
-            out_col,
-            include_current,
-        )
-        return out.drop(_GLOBAL_KEY)
-    upper = Window.currentRow if include_current else -1
-    w = (
-        Window.orderBy(*[F.col(f"`{c}`") for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, upper)
-    )
-    return df.withColumn(
-        out_col, F.coalesce(F.sum(F.col(f"`{value_col}`")).over(w), F.lit(0))
-    )
-
-
-def global_running_sum_two_pass(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    bucket_seconds: float = 3600.0,
-    out_col: str = "running_sum",
-) -> DataFrame:
-    """GLOBAL running sum over time without a single-task sort — the
-    "bucket-offset two-pass prefix sum" SCALE.md documents for the
-    un-keyed window class (e.g. the sweep-line gauge's boundary stream at
-    fact scale), now implemented (r9).
-
-    ``Window.orderBy(ts)`` with no partition key moves EVERY row through
-    ONE task — the most extreme form of the hot-key problem (the "key" is
-    the whole table). Running the keyed two-pass spine under a constant
-    synthetic key makes the parallelism unit the TIME BUCKET: one fact
-    shuffle to buckets, a time-range-bounded spine of per-bucket totals
-    for the prefix offsets, and the stitch join back. Same RANGE-frame
-    tie semantics as the naive global window (equal timestamps share one
-    running value).
-    """
-    if _GLOBAL_KEY in df.columns:
-        raise ValueError(f"input column collides with {_GLOBAL_KEY!r}")
-    out = running_sum_two_pass_spine(
-        df.withColumn(_GLOBAL_KEY, F.lit(1)),
-        _GLOBAL_KEY,
-        ts_col,
-        value_col,
-        bucket_seconds,
-        out_col,
-    )
-    return out.drop(_GLOBAL_KEY)
-
-
-def global_rank_two_pass(
-    df: DataFrame,
-    ts_col: str,
-    bucket_seconds: float = 3600.0,
-    out_col: str = "rank",
-) -> DataFrame:
-    """GLOBAL SQL RANK() by time without a single-task sort; see
-    ``global_running_sum_two_pass`` for the shape (tie-stable RANK — the
-    distributed form of "position in the globally sorted stream")."""
-    if _GLOBAL_KEY in df.columns:
-        raise ValueError(f"input column collides with {_GLOBAL_KEY!r}")
-    out = rank_two_pass_spine(
-        df.withColumn(_GLOBAL_KEY, F.lit(1)),
-        _GLOBAL_KEY,
-        ts_col,
-        bucket_seconds,
-        out_col,
-    )
-    return out.drop(_GLOBAL_KEY)
-
-
-def salted_join_small_side(
-    large: DataFrame,
-    small: DataFrame,
-    on_large: str,
-    on_small: str,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Shuffle join with the small side replicated per salt bucket so a hot
-    key in ``large`` spreads over ``salt_buckets`` tasks.
-
-    Prefer ``F.broadcast(small)`` when it fits; this exists for the case
-    where neither side broadcasts but one has hot keys."""
-    salted_large = large.withColumn(
-        "__salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    salt_ids = small.sparkSession.range(salt_buckets).select(
-        F.col("id").cast("int").alias("__salt")
-    )
-    salted_small = small.crossJoin(F.broadcast(salt_ids))
-    cond = (salted_large[on_large] == salted_small[on_small]) & (
-        salted_large["__salt"] == salted_small["__salt"]
-    )
-    return salted_large.join(salted_small, cond).drop("__salt")

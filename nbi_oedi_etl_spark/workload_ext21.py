@@ -141,7 +141,8 @@ def classifier_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     division + floor preserves), the bounded bucket-total table gets its
     offsets on one partition, and the per-value cumulative count is a
     window PARTITIONED BY bucket — the same two-pass prefix-sum shape as
-    ``token_budget_shards``, no single-partition sort of the corpus.
+    the un-keyed ``skew.keyed_cumsum_two_pass`` (``key_col=None``), no
+    single-partition sort of the corpus.
 
     Exactness: avgrank ties are handled as 2·avgrank = 2·C + n + 1
     (C = count of strictly-smaller values, n = tie-group size), keeping

@@ -229,8 +229,9 @@ def part_price_size_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan/scale: both windows run on the part DIMENSION (bounded by
     catalog size, not corpus); prices quantize to exact cents so the
     RANGE frame's (-∞, -1) bound is integral. A fact-table skyline
-    would bucket by price range first (the same two-pass shape as
-    ``token_budget_shards``); the dimension case needs no partitioning.
+    would bucket by price range first (the un-keyed two-pass spine,
+    ``skew.keyed_cumsum_two_pass`` with ``key_col=None``); the dimension
+    case needs no partitioning.
     """
     p = read_table(spark, sf_dir, "part")
     cents = F.floor(F.col("p_retailprice") * F.lit(100.0) + F.lit(0.5)).cast("bigint")

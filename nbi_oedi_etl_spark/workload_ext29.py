@@ -128,9 +128,9 @@ def max_concurrent_sessions_daily(spark: SparkSession, sf_dir: str) -> DataFrame
     Plan/scale: sessionization is user-keyed window work; the boundary
     stream is 2 rows/session. The running sum is a global ordered
     window over session boundaries — at 100 TB this would use the
-    bucket-offset two-pass prefix sum (token_budget_shards shape) on
-    day buckets; the boundary table here is session-scale, orders of
-    magnitude below the corpus.
+    bucket-offset two-pass prefix sum (``skew.running_sum_two_pass_spine``
+    with ``key_col=None``) on day buckets; the boundary table here is
+    session-scale, orders of magnitude below the corpus.
     """
     ev = read_table(spark, sf_dir, "events")
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -146,12 +146,13 @@ def source_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``skew.keyed_cumsum`` (naive keyed window below the measured ~1M
     rows/key crossover — the test-SF plan — two-pass spine bucketed by
     ``floor(n_chars/64)`` above it) and the global rank table via
-    ``skew.global_cumsum`` (direct window below the crossover, the
-    bucket-spine form above — no single-task sort at fact scale).
+    ``skew.keyed_cumsum`` with ``key_col=None`` (direct window below the
+    crossover, the bucket-spine form above — no single-task sort at fact
+    scale).
     Output is per (source, normalized decile) to keep the result
     bounded rather than per-row.
     """
-    from nbi_oedi_etl_spark.operators.skew import global_cumsum, keyed_cumsum
+    from nbi_oedi_etl_spark.operators.skew import keyed_cumsum
 
     d = read_table(spark, sf_dir, "documents")
     n_tot = d.count()
@@ -168,10 +169,10 @@ def source_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("one").join(F.broadcast(ns), "source")
     p = F.when(F.col("n_s") > 1, (F.col("r") - 1).cast("double") / (F.col("n_s") - 1).cast("double")).otherwise(F.lit(0.0))
     gidx = (F.floor(p * F.lit(float(n_tot - 1)) + F.lit(0.5)) + 1).cast("bigint")
-    glob = global_cumsum(
+    glob = keyed_cumsum(
         d.select("doc_id", "n_chars").withColumn("one", F.lit(1)),
-        ["n_chars", "doc_id"], nchars_bucket, "one",
-        out_col="g", include_current=True, total_rows=n_tot,
+        None, ["n_chars", "doc_id"], nchars_bucket, "one",
+        out_col="g", include_current=True, max_rows_per_key=n_tot,
     ).select(F.col("g").cast("bigint").alias("g"), F.col("n_chars").alias("norm_chars"))
     mapped = ranked_s.withColumn("g", gidx).join(glob, "g")
     # decile of the normalized value's relative rank — bounded output

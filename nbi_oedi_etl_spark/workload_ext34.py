@@ -152,22 +152,22 @@ def corpus_pack_sequences_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut every ``PACK_TOKENS`` tokens, with NO shard key to parallelize
     on — exactly the un-keyed-window wall (`Window.orderBy` moves every
     row through one task), so the cumsum runs through
-    ``operators/skew.global_running_sum_two_pass`` (the bucket-offset
-    two-pass prefix sum; doc_id is the "time" axis, 1000-id buckets the
-    parallelism unit). Same output contract as the per-source form minus
-    the shard column. The RANGE-frame running sum is INCLUSIVE of the
-    current doc; cum_before subtracts the doc's own tokens — exact
-    because doc_id is unique (no RANGE ties).
+    ``operators/skew.running_sum_two_pass_spine`` with ``key_col=None``
+    (the bucket-offset two-pass prefix sum; doc_id is the "time" axis,
+    1000-id buckets the parallelism unit). Same output contract as the
+    per-source form minus the shard column. The RANGE-frame running sum
+    is INCLUSIVE of the current doc; cum_before subtracts the doc's own
+    tokens — exact because doc_id is unique (no RANGE ties).
     """
-    from nbi_oedi_etl_spark.operators.skew import global_running_sum_two_pass
+    from nbi_oedi_etl_spark.operators.skew import running_sum_two_pass_spine
 
     d = read_table(spark, sf_dir, "documents")
     d = d.where(F.col("text").isNotNull() & (F.trim(F.col("text")) != "")).select(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
     )
-    out = global_running_sum_two_pass(
-        d, ts_col="doc_id", value_col="n_tokens", bucket_seconds=1000.0,
+    out = running_sum_two_pass_spine(
+        d, None, ts_col="doc_id", value_col="n_tokens", bucket_seconds=1000.0,
         out_col="cum_incl",
     )
     cum_before = (F.col("cum_incl") - F.col("n_tokens")).cast("long")

@@ -158,7 +158,7 @@ FROM events
 
 def spine_global_running_value_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GLOBAL running sum of event value by time via
-    ``global_running_sum_two_pass`` — the r9 implementation of SCALE.md's
+    ``running_sum_two_pass_spine`` with ``key_col=None`` — SCALE.md's
     "bucket-offset two-pass prefix sum" for the un-keyed window class
     (``Window.orderBy(ts)`` with no partition moves every row through ONE
     task; here the parallelism unit is the time bucket — measured 2.5×
@@ -166,13 +166,11 @@ def spine_global_running_value_sum(spark: SparkSession, sf_dir: str) -> DataFram
     unbounded in data size). Same decimal→double routing as
     ``spine_running_value_sum``.
     """
-    from nbi_oedi_etl_spark.operators.skew import global_running_sum_two_pass
-
     ev = read_table(spark, sf_dir, "events").withColumn(
         "value_dec", F.col("value").cast("decimal(18,6)")
     )
-    out = global_running_sum_two_pass(
-        ev, "ts", "value_dec", bucket_seconds=_BUCKET_SECONDS,
+    out = running_sum_two_pass_spine(
+        ev, None, "ts", "value_dec", bucket_seconds=_BUCKET_SECONDS,
         out_col="running_value",
     )
     return out.select(
@@ -192,15 +190,13 @@ FROM events
 
 
 def spine_global_event_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GLOBAL SQL RANK() by event time via ``global_rank_two_pass`` —
-    position in the globally sorted stream without a single-task sort
-    (measured 1.7× over the single-task form at 10M rows on 32 cores;
-    the naive form's one reducer is the scale wall)."""
-    from nbi_oedi_etl_spark.operators.skew import global_rank_two_pass
-
+    """GLOBAL SQL RANK() by event time via ``rank_two_pass_spine`` with
+    ``key_col=None`` — position in the globally sorted stream without a
+    single-task sort (measured 1.7× over the single-task form at 10M rows
+    on 32 cores; the naive form's one reducer is the scale wall)."""
     ev = read_table(spark, sf_dir, "events")
-    out = global_rank_two_pass(ev, "ts", bucket_seconds=_BUCKET_SECONDS,
-                               out_col="ts_rank")
+    out = rank_two_pass_spine(ev, None, "ts", bucket_seconds=_BUCKET_SECONDS,
+                              out_col="ts_rank")
     return out.select("event_id", "ts_rank")
 
 

@@ -394,7 +394,7 @@ def test_corpus_sharding_distributed_prefix_sum(spark):
     through one task."""
     df = _plan(spark, "corpus_shard_assignment")
     plan = physical_plan(df)
-    assert "hashpartitioning(bucket" in plan, "corpus window not bucket-partitioned"
+    assert "hashpartitioning(__bucket" in plan, "corpus window not bucket-partitioned"
     assert has_broadcast_join(df), "bucket offsets must broadcast, not shuffle"
 
 

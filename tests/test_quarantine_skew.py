@@ -6,7 +6,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from nbi_oedi_etl_spark.operators.skew import salted_grouped_sum, salted_join_small_side
+from nbi_oedi_etl_spark.operators.skew import salted_grouped_sum
 from nbi_oedi_etl_spark.sources.quarantine import read_with_quarantine
 from nbi_oedi_etl_spark.sources import read_table
 
@@ -50,16 +50,29 @@ def test_salted_grouped_sum_matches_plain_agg(spark):
         assert abs(s[k][0] - p[k][0]) < 1e-6 * max(1.0, abs(p[k][0]))
 
 
-def test_salted_join_matches_plain_join(spark):
-    orders = read_table(spark, SF_SMALL, "orders")
-    customer = read_table(spark, SF_SMALL, "customer")
-    salted_n = salted_join_small_side(
-        orders, customer, "o_custkey", "c_custkey", salt_buckets=4
-    ).count()
-    plain_n = orders.join(
-        customer, orders["o_custkey"] == customer["c_custkey"]
-    ).count()
-    assert salted_n == plain_n
+def test_salted_grouped_sum_on_dotted_oedi_names(spark):
+    """Every OEDI measure is a dotted name (``out.electricity.total``):
+    the salted partials must be read back literally, not as a nested
+    field path, and match the plain groupBy."""
+    df = spark.createDataFrame(
+        [("CA", 1.5, 2.0), ("CA", 2.5, 1.0), ("NY", 3.0, 4.0), (None, 7.0, 0.5)]
+        * 5,
+        ["in.state", "out.electricity.total", "out.natural_gas.total"],
+    )
+    measures = ["out.electricity.total", "out.natural_gas.total"]
+    salted = salted_grouped_sum(df, ["in.state"], measures, salt_buckets=4)
+    plain = df.groupBy(F.col("`in.state`")).agg(
+        *[F.sum(F.col(f"`{c}`")).alias(f"{c}_sum") for c in measures],
+        F.count(F.lit(1)).alias("n_rows"),
+    )
+    assert salted.columns == plain.columns
+    got = {r[0]: tuple(r[1:]) for r in salted.collect()}
+    want = {r[0]: tuple(r[1:]) for r in plain.collect()}
+    assert got.keys() == want.keys() == {"CA", "NY", None}
+    for k, w in want.items():
+        assert got[k][-1] == w[-1]
+        for g, x in zip(got[k][:-1], w[:-1]):
+            assert abs(g - x) < 1e-9
 
 
 # ---- two-pass spine sessionizer (the documented skew mitigation) ----
@@ -340,8 +353,9 @@ def test_two_pass_spine_plan_never_partitions_facts_by_key_alone(spark):
     on the key ALONE must be the spine's per-key pass (frames over
     bucket-grain aggregates, never fact-row expressions — a key-only
     fact window would recreate the single-task hot spot); fact windows
-    partition on (key, __bucket). With broadcast_spine=True the spine
-    must come back as a broadcast join (no second fact shuffle)."""
+    partition on (key, __bucket). At test scale AQE must bring the spine
+    back as a broadcast join (no second fact shuffle), read from the
+    final adaptive plan after the collect."""
     from nbi_oedi_etl_spark.operators.skew import (
         rank_two_pass_spine,
         running_sum_two_pass_spine,
@@ -350,10 +364,11 @@ def test_two_pass_spine_plan_never_partitions_facts_by_key_alone(spark):
 
     ev = read_table(spark, SF_SMALL, "events").select("user_id", "ts", "value")
     for df in (
-        sessionize_two_pass_spine(ev, "user_id", "ts", 1800.0, broadcast_spine=True),
-        running_sum_two_pass_spine(ev, "user_id", "ts", "value", broadcast_spine=True),
-        rank_two_pass_spine(ev, "user_id", "ts", broadcast_spine=True),
+        sessionize_two_pass_spine(ev, "user_id", "ts", 1800.0),
+        running_sum_two_pass_spine(ev, "user_id", "ts", "value"),
+        rank_two_pass_spine(ev, "user_id", "ts"),
     ):
+        df.collect()  # executes THIS QueryExecution, letting AQE finalize it
         plan = df._jdf.queryExecution().executedPlan().toString()
         windows = _window_partition_specs(plan)
         assert windows, plan
@@ -374,8 +389,8 @@ def test_two_pass_spine_plan_never_partitions_facts_by_key_alone(spark):
 
 
 def test_two_pass_spine_default_adapts_to_runtime_spine_size(spark):
-    """The r9 default (broadcast_spine=False) defers the stitch-join
-    strategy to AQE: the spine is a shuffle-stage output, so AQE sees its
+    """The stitch join carries no hint and defers its strategy to AQE:
+    the spine is a shuffle-stage output, so AQE sees its
     ACTUAL size and broadcasts when it fits the threshold — the
     auto-fallback that keeps extreme key cardinality from blowing the
     driver budget (ADVICE r8). At test scale the spine is tiny, so the
@@ -468,41 +483,6 @@ def test_rank_spine_property_random_corpora_with_ties(spark):
         assert a == b
 
     check()
-
-
-def test_spine_front_doors_dispatch_both_ways(spark):
-    """VERDICT r8 optional task: the sessionize/running_sum/rank_by_time
-    front doors measure the hottest key and dispatch naive below the
-    crossover, spine at/above it — with identical results either way."""
-    from nbi_oedi_etl_spark.operators import skew
-
-    ev = read_table(spark, SF_SMALL, "events").select(
-        "event_id", "user_id", "ts", "value"
-    )
-
-    def shape(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return "__bucket" in plan
-
-    # sf0.001 hot key is far below 1M rows → naive form (no spine internals)
-    naive = skew.sessionize(ev, "user_id", "ts", 1800.0)
-    assert not shape(naive)
-    # crossover=1 forces the spine branch on the same data
-    spine = skew.sessionize(ev, "user_id", "ts", 1800.0, crossover=1)
-    assert shape(spine)
-    key = lambda rows: sorted((r["event_id"], r["session_id"]) for r in rows)
-    assert key(naive.collect()) == key(spine.collect())
-
-    # supplying max_rows_per_key skips the probe and steers the dispatch
-    assert not shape(skew.running_sum(ev, "user_id", "ts", "value", max_rows_per_key=10))
-    assert shape(skew.running_sum(ev, "user_id", "ts", "value", max_rows_per_key=10**9))
-    assert not shape(skew.rank_by_time(ev, "user_id", "ts", max_rows_per_key=10))
-    assert shape(skew.rank_by_time(ev, "user_id", "ts", max_rows_per_key=10**9))
-
-    r_naive = skew.rank_by_time(ev, "user_id", "ts", max_rows_per_key=10)
-    r_spine = skew.rank_by_time(ev, "user_id", "ts", max_rows_per_key=10**9)
-    keyr = lambda rows: sorted((r["event_id"], r["rank"]) for r in rows)
-    assert keyr(r_naive.collect()) == keyr(r_spine.collect())
 
 
 def test_spine_null_key_and_null_ts_parity_with_naive(spark):
@@ -638,8 +618,8 @@ def test_global_two_pass_matches_naive_global_window(spark):
     from pyspark.sql import Window
 
     from nbi_oedi_etl_spark.operators.skew import (
-        global_rank_two_pass,
-        global_running_sum_two_pass,
+        rank_two_pass_spine,
+        running_sum_two_pass_spine,
     )
 
     t0 = dt.datetime(2024, 1, 1)
@@ -659,30 +639,22 @@ def test_global_two_pass_matches_naive_global_window(spark):
     c = sorted(map(tuple, naive_rank_df.select("id", "rank").collect()))
     for bucket in (7.0, 3600.0):
         b = sorted(map(tuple,
-            global_running_sum_two_pass(df, "ts", "value", bucket_seconds=bucket)
+            running_sum_two_pass_spine(df, None, "ts", "value", bucket_seconds=bucket)
             .select("id", "running_sum").collect()))
         assert a == b, f"running_sum bucket={bucket}"
         d = sorted(map(tuple,
-            global_rank_two_pass(df, "ts", bucket_seconds=bucket)
+            rank_two_pass_spine(df, None, "ts", bucket_seconds=bucket)
             .select("id", "rank").collect()))
         assert c == d, f"rank bucket={bucket}"
-
-    # the synthetic key never leaks, and a clash fails loudly
-    cols = set(global_rank_two_pass(df, "ts").columns)
-    assert "__gkey" not in cols
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="__gkey"):
-        global_rank_two_pass(df.withColumn("__gkey", F.lit(1)), "ts")
 
 
 def test_global_two_pass_plan_parallelizes_by_bucket(spark):
     """Structural pin: the naive global window plans a SINGLE-partition
     sort (Window with empty partition spec); the two-pass form's fact
-    windows partition on (constant, bucket) — bucket-grain parallelism."""
+    windows partition on the bucket — bucket-grain parallelism."""
     from pyspark.sql import Window
 
-    from nbi_oedi_etl_spark.operators.skew import global_running_sum_two_pass
+    from nbi_oedi_etl_spark.operators.skew import running_sum_two_pass_spine
 
     ev = read_table(spark, SF_SMALL, "events").select("ts", "value")
     sec = F.col("ts").cast("timestamp").cast("double")  # NTZ → double is 2 hops
@@ -697,7 +669,7 @@ def test_global_two_pass_plan_parallelizes_by_bucket(spark):
     )
     assert naive_windows and all(spec.strip() == "" for spec, _ in naive_windows)
 
-    spine = global_running_sum_two_pass(ev, "ts", "value")
+    spine = running_sum_two_pass_spine(ev, None, "ts", "value")
     windows = _window_partition_specs(
         spine._jdf.queryExecution().executedPlan().toString()
     )
@@ -865,7 +837,7 @@ def test_keyed_cumsum_front_door_dispatch_both_ways(spark):
     assert not shape(naive)  # sf0.001 hot source is far below 1M rows
     spine = skew.keyed_cumsum(
         d, "source", ["doc_id"], bucket, "v", out_col="c",
-        include_current=False, crossover=1,
+        include_current=False, max_rows_per_key=10**9,
     )
     assert shape(spine)
     assert _cumsum_rows(naive) == _cumsum_rows(spine)
@@ -881,7 +853,8 @@ def test_keyed_cumsum_front_door_dispatch_both_ways(spark):
 def test_keyed_cumsum_plan_never_partitions_facts_by_key_alone(spark):
     """Structural pin of the scale property for the generalized form:
     fact windows partition on (key, __bucket); the only key-alone window
-    is the spine's prefix over bucket-grain totals."""
+    is the spine's prefix over bucket-grain totals; AQE brings the spine
+    back as a broadcast join at test scale."""
     from nbi_oedi_etl_spark.operators.skew import keyed_cumsum_two_pass
 
     d = (
@@ -890,8 +863,9 @@ def test_keyed_cumsum_plan_never_partitions_facts_by_key_alone(spark):
     )
     df = keyed_cumsum_two_pass(
         d, "source", ["doc_id"], F.floor(F.col("doc_id") / 7), "v",
-        out_col="c", include_current=False, broadcast_spine=True,
+        out_col="c", include_current=False,
     )
+    df.collect()  # executes THIS QueryExecution, letting AQE finalize it
     plan = df._jdf.queryExecution().executedPlan().toString()
     windows = _window_partition_specs(plan)
     assert windows, plan
@@ -921,10 +895,11 @@ def test_keyed_cumsum_rejects_colliding_columns(spark):
         )
 
 
-def test_global_cumsum_dispatch_and_equivalence(spark):
-    """global_cumsum (arbitrary-order global form, r11): direct-window
-    and two-pass-spine branches produce identical values; dispatch
-    honors total_rows/crossover; value=1 yields a global row_number."""
+def test_unkeyed_cumsum_dispatch_and_equivalence(spark):
+    """keyed_cumsum with key_col=None (arbitrary-order global form):
+    direct-window and two-pass-spine branches produce identical values;
+    dispatch honors max_rows_per_key; value=1 yields a global
+    row_number."""
     from nbi_oedi_etl_spark.operators import skew
 
     d = (
@@ -937,12 +912,12 @@ def test_global_cumsum_dispatch_and_equivalence(spark):
     def shape(df):
         return "__bucket" in df._jdf.queryExecution().executedPlan().toString()
 
-    direct = skew.global_cumsum(
-        d, ["n_chars", "doc_id"], bucket, "one", out_col="g", total_rows=50
+    direct = skew.keyed_cumsum(
+        d, None, ["n_chars", "doc_id"], bucket, "one", out_col="g", max_rows_per_key=50
     )
     assert not shape(direct)
-    spine = skew.global_cumsum(
-        d, ["n_chars", "doc_id"], bucket, "one", out_col="g", crossover=1
+    spine = skew.keyed_cumsum(
+        d, None, ["n_chars", "doc_id"], bucket, "one", out_col="g", max_rows_per_key=10**9
     )
     assert shape(spine)
     key = lambda df: sorted((r["doc_id"], r["g"]) for r in df.collect())
@@ -952,10 +927,51 @@ def test_global_cumsum_dispatch_and_equivalence(spark):
     assert sorted(g for _, g in a) == list(range(1, len(a) + 1))
 
 
+def test_token_budget_shards_keeps_null_doc_id(spark):
+    """A NULL doc_id is a document too: token_budget_shards keeps it and
+    every row equals the single-window form
+    sum(n_tokens) OVER (ORDER BY doc_id NULLS FIRST ROWS UNBOUNDED
+    PRECEDING) — a null-unsafe offsets join drops the row while its
+    tokens still shift the others' running totals."""
+    from pyspark.sql import Window
+
+    from nbi_oedi_etl_spark.operators.sharding import token_budget_shards
+    from nbi_oedi_etl_spark.operators.text import token_count
+
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (None, "d e f g"), (5000, "h i")], "doc_id long, text string"
+    )
+    got = sorted(
+        map(tuple, token_budget_shards(docs, budget_tokens=5).collect()),
+        key=repr,
+    )
+    w = Window.orderBy(F.col("doc_id").asc_nulls_first()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    naive = docs.select(
+        "doc_id", token_count(F.col("text")).cast("long").alias("n_tokens")
+    ).withColumn("cum_tokens", F.sum("n_tokens").over(w))
+    want = sorted(
+        (
+            (
+                r["doc_id"],
+                r["n_tokens"],
+                r["cum_tokens"],
+                (r["cum_tokens"] - r["n_tokens"]) // 5,
+            )
+            for r in naive.collect()
+        ),
+        key=repr,
+    )
+    assert len(got) == 3
+    assert got == want
+
+
 def test_quantile_normalize_spine_branch_matches_naive(spark):
     """The r11 rewiring of source_quantile_normalize: forcing BOTH rank
-    tables onto the two-pass spine (crossover=1 via monkeypatched
-    dispatch) must reproduce the registered spec's output exactly."""
+    tables onto the two-pass spine (max_rows_per_key=10**9 via
+    monkeypatched dispatch) must reproduce the registered spec's output
+    exactly."""
     from unittest import mock
 
     from nbi_oedi_etl_spark.operators import skew
@@ -964,18 +980,12 @@ def test_quantile_normalize_spine_branch_matches_naive(spark):
     sf = SF_SMALL
     want = sorted(map(tuple, source_quantile_normalize(spark, sf).collect()))
 
-    real_keyed, real_global = skew.keyed_cumsum, skew.global_cumsum
+    real_keyed = skew.keyed_cumsum
 
     def keyed_spine(*a, **kw):
-        kw["crossover"] = 1
+        kw["max_rows_per_key"] = 10**9
         return real_keyed(*a, **kw)
 
-    def global_spine(*a, **kw):
-        kw["crossover"] = 1
-        return real_global(*a, **kw)
-
-    with mock.patch.object(skew, "keyed_cumsum", keyed_spine), mock.patch.object(
-        skew, "global_cumsum", global_spine
-    ):
+    with mock.patch.object(skew, "keyed_cumsum", keyed_spine):
         got = sorted(map(tuple, source_quantile_normalize(spark, sf).collect()))
     assert got == want and len(got) > 0
