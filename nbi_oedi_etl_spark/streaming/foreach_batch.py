@@ -19,6 +19,9 @@ state. Two standard shapes:
   ``batch_id`` partition column. The r8 checkpoint drill proved the
   naive plain-append-then-marker shape is NOT exactly-once (a crash
   between commit and marker double-appends on replay), hence this form.
+
+``run_batches`` is the package's one ``foreachBatch`` call: a stream's
+checkpoint and outputs share one root, which holds all of its state.
 """
 
 from __future__ import annotations
@@ -27,6 +30,40 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+
+
+def run_batches(
+    stream: DataFrame, root: str, step: Callable[[DataFrame, int], None]
+) -> None:
+    """Drain ``stream`` through ``foreachBatch(step)`` under availableNow,
+    checkpointed at ``root/_checkpoint``. A rerun on the same root resumes
+    after the last batch the checkpoint committed; a batch that crashed
+    is replayed with its own id, so ``step`` must read its prior state
+    through ``last_committed`` (never from the closure) and overwrite its
+    own ``batch=<id>`` outputs."""
+    (
+        stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", os.path.join(root, "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def last_committed(root: str, name: str, batch_id: float, *also: str) -> int | None:
+    """The highest ``k < batch_id`` whose ``root/<name>/batch=<k>`` holds a
+    ``_SUCCESS`` marker — and so does ``root/<a>/batch=<k>`` for each name
+    in ``also`` (a state written as several outputs counts only once all
+    of them committed). None before the first commit."""
+
+    def committed(k: int) -> bool:
+        paths = (os.path.join(root, n, f"batch={k}", "_SUCCESS") for n in (name, *also))
+        return all(os.path.exists(p) for p in paths)
+
+    base = os.path.join(root, name)
+    dirs = os.listdir(base) if os.path.isdir(base) else []
+    ks = (int(d[6:]) for d in dirs if d.startswith("batch="))
+    return max((k for k in ks if k < batch_id and committed(k)), default=None)
 
 
 def partitioned_overwrite_sink(

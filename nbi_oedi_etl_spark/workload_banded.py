@@ -19,6 +19,8 @@ Reference parity: no reference analogue (§2.12 extension, scale path).
 
 from __future__ import annotations
 
+import glob
+import os
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
 
@@ -34,6 +36,7 @@ from nbi_oedi_etl_spark.operators.banded_layout import (
     probe_banded_layout,
     write_banded_layout,
 )
+from nbi_oedi_etl_spark.streaming.foreach_batch import run_batches
 
 #: 4 bands × 2 signature slots — the banding of _portable_minhash_pairs.
 _BANDS = 4
@@ -56,16 +59,12 @@ def _staged_dir_intact(src: str) -> bool:
     reused: a partially-swept tempdir (part0/part1 gone, part2 alive)
     would silently drop ~2/3 of every consumer stream's batches
     (ADVICE r13 / VERDICT r13 minor finding)."""
-    import os
-
     return all(
         os.path.isfile(os.path.join(src, f"part{k}.parquet")) for k in range(3)
     )
 
 
-def _stage_mod3_split(sf_dir: str, table: str, id_col: str, prefix: str) -> str:
-    import os
-
+def _stage_mod3_split(sf_dir: str, table: str, id_col: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -75,7 +74,7 @@ def _stage_mod3_split(sf_dir: str, table: str, id_col: str, prefix: str) -> str:
         return pc.subtract(col, pc.multiply(pc.divide(col, 3), 3))
 
     def build() -> str:
-        src = tempfile.mkdtemp(prefix=prefix)
+        src = tempfile.mkdtemp(prefix="mod3_src_")
         t = pq.read_table(f"{sf_dir}/{table}.parquet")
         for k in range(3):
             path = os.path.join(src, f"part{k}.parquet")
@@ -99,22 +98,14 @@ def _stage_mod3_split(sf_dir: str, table: str, id_col: str, prefix: str) -> str:
 _STAGED_THIRDS_CACHE = Memo(8)
 
 
-def stage_sliced_thirds(sf_dir: str, table: str, prefix: str) -> str:
+def stage_sliced_thirds(sf_dir: str, table: str) -> str:
     """Stage ``{sf_dir}/{table}.parquet`` as 3 row-range slices with
     mtimes ordered for stable file-age micro-batch ordering; memoized
-    per (sf_dir, table).
-
-    NOTE the cache key deliberately omits ``prefix``: all three
-    foreachBatch specs share ONE staged split of the same table, so
-    only the FIRST caller's prefix ever names the tempdir (fb_uniq /
-    fb_ewma paths will show fb_upsert_src_* dirs — cosmetic, ADVICE
-    r13 #4; keying on prefix would defeat the sharing)."""
-    import os
-
+    per (sf_dir, table), so every consumer shares one staged split."""
     import pyarrow.parquet as pq
 
     def build() -> str:
-        src = tempfile.mkdtemp(prefix=prefix)
+        src = tempfile.mkdtemp(prefix="thirds_src_")
         t = pq.read_table(f"{sf_dir}/{table}.parquet")
         n = t.num_rows
         cuts = [0, n // 3, 2 * n // 3, n]
@@ -129,35 +120,66 @@ def stage_sliced_thirds(sf_dir: str, table: str, prefix: str) -> str:
     )
 
 
-def drain_mod3_batches(spark, sf_dir: str, table: str, id_col: str, apply_batch, prefix: str):
-    """Shared 3-micro-batch CDC drain harness (r11 self-review: four
-    specs had copy-pasted this scaffold). Stages ``table`` into 3
-    deterministic parts (``id_col % 3``, mtimes ordered so file-age
-    ordering is stable — memoized per (sf_dir, table, id_col) since the
-    split is immutable), drains them one file per trigger through
-    ``foreachBatch(apply_batch)`` under availableNow, and returns the
-    scoped streaming session so the caller can read its own output
-    roots. State/versioning stays in the caller's closure — only the
-    staging + drain mechanics live here."""
+def drain_event_thirds(spark, sf_dir: str, make_step, prefix: str):
+    """The ``events`` twin of ``drain_mod3_batches``: the 3 row-range
+    slices of ``stage_sliced_thirds``, ``ts`` normalized by
+    ``ingest.events_file_stream``, one slice per trigger."""
     from nbi_oedi_etl_spark.streaming import ingest
 
     s = ingest.scoped_streaming_session(spark)
-    src = _stage_mod3_split(sf_dir, table, id_col, prefix)
+    src = stage_sliced_thirds(sf_dir, "events")
+    stream = ingest.events_file_stream(s, sf_dir, max_files_per_trigger=1, stream_dir=src)
+    root = tempfile.mkdtemp(prefix=prefix)
+    run_batches(stream, root, make_step(root))
+    return s, root
 
-    raw_schema = ingest.table_schema(s, sf_dir, table)
+
+def drain_mod3_batches(spark, sf_dir: str, table: str, id_col: str, make_step, prefix: str):
+    """Shared 3-micro-batch CDC drain harness: ``table`` staged as 3
+    parts (``id_col % 3``, memoized, mtimes ordered for a stable file-age
+    order), drained one part per trigger by ``run_batches`` into one
+    fresh root. ``make_step(root)`` builds the step; its state lives in
+    the root, not its closure. Returns (scoped session, root)."""
+    from nbi_oedi_etl_spark.streaming import ingest
+
+    s = ingest.scoped_streaming_session(spark)
     stream = (
-        s.readStream.schema(raw_schema)
+        s.readStream.schema(ingest.table_schema(s, sf_dir, table))
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        .parquet(_stage_mod3_split(sf_dir, table, id_col))
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return s
+    root = tempfile.mkdtemp(prefix=prefix)
+    run_batches(stream, root, make_step(root))
+    return s, root
+
+
+def _layout_cdc_step(root: str, out_schema: str, fit, step):
+    """``drain_layout_cdc``'s step: layout at ``root/layout``, results at
+    ``root/out/batch=<id>``."""
+    layout = os.path.join(root, "layout")
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        bs = batch_df.sparkSession
+        dest = os.path.join(root, "out", f"batch={batch_id}")
+        out = None
+        if glob.glob(os.path.join(layout, "_*meta.json")):  # fitted
+            out = step(bs, batch_df, layout)
+        else:
+            fit(bs, batch_df, layout)
+        if out is None:
+            empty = bs.createDataFrame([], out_schema).repartition(1)
+            empty.write.mode("overwrite").parquet(dest)
+            return
+        result, append = out
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            legs = [
+                pool.submit(lambda: result.write.mode("overwrite").parquet(dest)),
+                pool.submit(append),
+            ]
+        for leg in legs:  # both joined by the pool's exit; re-raise
+            leg.result()
+
+    return apply_batch
 
 
 def drain_layout_cdc(
@@ -172,9 +194,11 @@ def drain_layout_cdc(
     its own partition (r12: the old prev-union-overwrite rewrote the
     accumulated results every trigger, O(B²) write volume).
 
-    - ``fit(bs, batch, layout) -> bool`` runs until it returns True; False
-      means there was nothing to fit (IVF fits on the first NONEMPTY
-      batch). Its batch writes an empty delta.
+    - ``fit(bs, batch, layout)`` runs until the layout is fitted, which
+      means a layout sidecar (``_*meta.json``) exists: both layout
+      writers write it after the data. A fit that writes nothing (IVF
+      on an empty batch) leaves the next batch to fit. Its batch writes
+      an empty delta.
     - ``step(bs, batch, layout) -> (result, append) | None`` runs on every
       batch after that. ``None`` (an empty batch) writes an empty delta.
 
@@ -195,35 +219,12 @@ def drain_layout_cdc(
     (overwritten in place) gains within-batch matches an uninterrupted
     run does not emit, and the layout keeps the batch's rows twice.
     Batch-owned idempotent appends are ROADMAP direction C."""
-    import os
-
-    layout = tempfile.mkdtemp(prefix=f"{prefix}layout_") + "/layout"
-    out_root = tempfile.mkdtemp(prefix=f"{prefix}out_")
-    state = {"fitted": False}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bs = batch_df.sparkSession
-        dest = os.path.join(out_root, f"batch={batch_id}")
-        out = None
-        if state["fitted"]:
-            out = step(bs, batch_df, layout)
-        else:
-            state["fitted"] = fit(bs, batch_df, layout)
-        if out is None:
-            empty = bs.createDataFrame([], out_schema).repartition(1)
-            empty.write.mode("overwrite").parquet(dest)
-            return
-        result, append = out
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            legs = [
-                pool.submit(lambda: result.write.mode("overwrite").parquet(dest)),
-                pool.submit(append),
-            ]
-        for leg in legs:  # both joined by the pool's exit; re-raise
-            leg.result()
-
-    s = drain_mod3_batches(spark, sf_dir, table, id_col, apply_batch, f"{prefix}src_")
-    return s.read.parquet(out_root).select(*StructType.fromDDL(out_schema).fieldNames())
+    s, root = drain_mod3_batches(
+        spark, sf_dir, table, id_col,
+        lambda root: _layout_cdc_step(root, out_schema, fit, step), prefix,
+    )
+    out = s.read.parquet(os.path.join(root, "out"))
+    return out.select(*StructType.fromDDL(out_schema).fieldNames())
 
 
 def _portable_band_rows(sig: DataFrame) -> DataFrame:
@@ -328,10 +329,9 @@ def streaming_banded_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ext._portable_signatures(batch.select("doc_id", "text"))
         )
 
-    def fit(bs, batch, layout) -> bool:
+    def fit(bs, batch, layout) -> None:
         # first batch: nothing before it — just materialize the layout
         write_banded_layout(None, layout, n_buckets=16, banded_rows=rows(batch))
-        return True
 
     return drain_layout_cdc(
         spark, sf_dir, "documents", "doc_id", "banded_cdc_",
@@ -357,7 +357,7 @@ def streaming_banded_cdc_dedup_production(
     the bench headline set, so BENCH_DETAIL carries the ratio per round.
     """
 
-    def fit(bs, batch, layout) -> bool:
+    def fit(bs, batch, layout) -> None:
         # SAME banding geometry as the portable twin (8 hashes × 4 bands,
         # 16 buckets) so the bench ratio isolates the HASH FAMILY
         # premium, not a signature-width difference
@@ -365,7 +365,6 @@ def streaming_banded_cdc_dedup_production(
             batch.select("doc_id", "text"), layout, num_hashes=8, bands=4,
             n_buckets=16,
         )
-        return True
 
     def step(bs, batch, layout):
         # band the batch ONCE with the layout's own sidecar parameters
@@ -441,17 +440,15 @@ _ANN_CDC_SCHEMA = "query_id long, vec_id long, cos_sim double, rank int"
 
 
 def _ivf_cdc_fit(write_layout):
-    """``fit`` for the IVF streams: the layout fits on the first NONEMPTY
-    batch (the r11 wave-2 self-review caught a single-flag version taking
-    the probe branch against a never-written layout when only the FIRST
-    batch is empty)."""
+    """``fit`` for the IVF streams: an empty batch writes no layout and so
+    no sidecar, and the next batch fits again — a flag set by the first
+    batch would probe a never-written layout when only that batch is
+    empty."""
 
-    def fit(bs, batch, layout) -> bool:
+    def fit(bs, batch, layout) -> None:
         vecs = batch.select("vec_id", "embedding")
-        if vecs.isEmpty():
-            return False
-        write_layout(vecs, layout)
-        return True
+        if not vecs.isEmpty():
+            write_layout(vecs, layout)
 
     return fit
 

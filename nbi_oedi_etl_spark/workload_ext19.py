@@ -1,12 +1,12 @@
-"""Round-4 extension queries, wave 13: exactly-once CDC apply through
+"""Round-4 extension queries, wave 13: restartable CDC apply through
 foreachBatch, time-bounded funnel attribution, and revenue concentration
 analysis.
 
 - ``streaming_foreachbatch_upsert`` — continuous CDC apply: a 3-batch
   event stream folds into a latest-per-key snapshot via foreachBatch,
   each batch committing a VERSIONED snapshot (write path keyed by
-  batch_id — a replayed batch rewrites ITS version identically, the
-  exactly-once contract of §2.9 T5 as a driver-checked query). The final
+  batch_id — a replayed batch rewrites ITS version identically, and a
+  restart on the same root resumes from the last committed version). The final
   snapshot must equal the batch latest-per-key compaction — shares
   LATEST_EVENT_ORACLE.
 - ``event_funnel_windowed`` — the ordered funnel with ATTRIBUTION
@@ -24,80 +24,58 @@ Oracle convention identical to workload.py.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nbi_oedi_etl_spark.sources.parquet import read_table
+from nbi_oedi_etl_spark.streaming.foreach_batch import last_committed
 
 # ----------------------------------- foreachBatch CDC upsert (T5)
 
 
+def _upsert_step(root: str):
+    """``streaming_foreachbatch_upsert``'s step: merge the batch into the
+    last committed snapshot and commit ``root/v/batch=<id>``."""
+    from nbi_oedi_etl_spark.operators import dedup
+
+    def latest(df: DataFrame) -> DataFrame:
+        return dedup.latest_by_key(
+            df, keys=["user_id"], order_col="ts", tiebreaks=["event_id"]
+        )
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        merged = latest(batch_df.select("user_id", "event_id", "ts", "event_type", "value"))
+        k = last_committed(root, "v", batch_id)
+        if k is not None:
+            prev = batch_df.sparkSession.read.parquet(f"{root}/v/batch={k}")
+            merged = latest(prev.unionByName(merged))
+        merged.write.mode("overwrite").parquet(f"{root}/v/batch={batch_id}")
+
+    return apply_batch
+
+
 def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-per-key CDC snapshot maintained through foreachBatch over a
-    3-micro-batch stream: each batch merges its rows into the running
-    snapshot and commits snapshot version ``batch_id`` (versioned paths —
-    a retried batch rewrites its own version with identical bytes, so the
-    sink is exactly-once under the at-least-once foreachBatch contract;
-    the ledger/overwrite variants live in streaming/foreach_batch.py with
-    replay-idempotence unit tests). The drained snapshot must equal the
-    batch latest-per-key compaction over ALL events — the oracle proof
-    that incremental apply ≡ full recompute, the streaming twin of
-    resample_incremental_merge's claim.
+    3-micro-batch stream: each batch merges its rows into the last
+    committed snapshot, read back from the root, and commits version
+    ``root/v/batch=<id>`` — a retried batch rewrites its own version, and
+    a rerun on the same root resumes from the checkpoint. The
+    drained snapshot must equal the batch latest-per-key compaction over
+    ALL events — the oracle proof that incremental apply ≡ full
+    recompute, the streaming twin of resample_incremental_merge's claim.
 
     Scale: per batch the work is |batch| + |snapshot keys|; the snapshot
     is the bounded state (one row per user). In production the versioned
     dir is a table-format commit (Delta/Iceberg); plain parquet versions
     express the same idempotence without the transaction log.
     """
-    import os
-    import tempfile
+    from nbi_oedi_etl_spark.workload_banded import drain_event_thirds
 
-    from nbi_oedi_etl_spark.operators import dedup
-    from nbi_oedi_etl_spark.streaming import ingest
-
-    s = ingest.scoped_streaming_session(spark)
-    # 3 row-range slices -> 3 deterministic micro-batches (staged once
-    # per process via the memoized stage_sliced_thirds)
-    from nbi_oedi_etl_spark.workload_banded import stage_sliced_thirds
-
-    src = stage_sliced_thirds(sf_dir, "events", "fb_upsert_src_")
-
-    target_root = tempfile.mkdtemp(prefix="fb_upsert_tgt_")
-    state = {"version": -1}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_latest = dedup.latest_by_key(
-            batch_df.select("user_id", "event_id", "ts", "event_type", "value"),
-            keys=["user_id"],
-            order_col="ts",
-            tiebreaks=["event_id"],
-        )
-        if state["version"] >= 0:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(target_root, f"v{state['version']}")
-            )
-            merged = dedup.latest_by_key(
-                prev.unionByName(batch_latest),
-                keys=["user_id"],
-                order_col="ts",
-                tiebreaks=["event_id"],
-            )
-        else:
-            merged = batch_latest
-        merged.write.mode("overwrite").parquet(
-            os.path.join(target_root, f"v{batch_id}")
-        )
-        state["version"] = batch_id
-
-    stream = ingest.events_file_stream(s, sf_dir, max_files_per_trigger=1, stream_dir=src)
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    snap = s.read.parquet(os.path.join(target_root, f"v{state['version']}"))
+    s, root = drain_event_thirds(spark, sf_dir, _upsert_step, "fb_upsert_")
+    k = last_committed(root, "v", math.inf)
+    snap = s.read.parquet(f"{root}/v/batch={k}")
     return snap.select(
         "user_id",
         "event_id",

@@ -3,7 +3,7 @@ greedy submodular corpus selection.
 
 - ``streaming_cumulative_unique_users`` — the cumulative-uniques metric
   maintained INCREMENTALLY through foreachBatch (first-seen state merged
-  per micro-batch, versioned exactly-once commits); the drained state
+  per micro-batch, versioned commits a restart resumes from); the drained state
   must reproduce the batch ``cumulative_unique_users`` result exactly —
   incremental apply ≡ full recompute, the uniques twin of the CDC
   upsert proof. Shares CUMULATIVE_UNIQUE_ORACLE verbatim.
@@ -18,76 +18,62 @@ Oracle convention identical to workload.py.
 
 from __future__ import annotations
 
-import os
-import tempfile
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nbi_oedi_etl_spark.sources.parquet import read_table
+from nbi_oedi_etl_spark.streaming.foreach_batch import last_committed
 from nbi_oedi_etl_spark.workload_ext22 import word_trigram_rows
 
 # ------------------------------------- streaming incremental uniques
 
 
-def streaming_cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative distinct users per day, maintained incrementally over
-    a 3-micro-batch stream: the foreachBatch state is (user → first-seen
-    day) plus the active-day set, merged per batch with min() semantics
-    and committed under versioned paths (exactly-once under replay, the
-    streaming_foreachbatch_upsert discipline). The drained state yields
-    the per-day new/cumulative counts — which must equal the one-shot
-    batch computation over all events (shared oracle).
-
-    Scale: per batch the state is |users| + |days| rows — the bounded
-    first-seen reduction, not raw events; the merge is one keyed min.
-    """
-    from nbi_oedi_etl_spark.streaming import ingest
-
-    s = ingest.scoped_streaming_session(spark)
-    from nbi_oedi_etl_spark.workload_banded import stage_sliced_thirds
-
-    src = stage_sliced_thirds(sf_dir, "events", "fb_uniq_src_")
-
-    target_root = tempfile.mkdtemp(prefix="fb_uniq_tgt_")
-    state = {"version": -1}
+def _uniques_step(root: str):
+    """``streaming_cumulative_unique_users``' step: merge the batch into
+    the last version whose ``seen`` AND ``days`` both committed."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         seen = batch_df.groupBy("user_id").agg(
             F.min(F.to_date("ts")).alias("fday")
         )
         days = batch_df.select(F.to_date("ts").alias("day")).distinct()
-        if state["version"] >= 0:
-            prev_seen = batch_df.sparkSession.read.parquet(
-                os.path.join(target_root, f"seen_v{state['version']}")
-            )
+        k = last_committed(root, "seen", batch_id, "days")
+        if k is not None:
+            prev_seen = batch_df.sparkSession.read.parquet(f"{root}/seen/batch={k}")
             seen = (
                 prev_seen.unionByName(seen)
                 .groupBy("user_id")
                 .agg(F.min("fday").alias("fday"))
             )
-            prev_days = batch_df.sparkSession.read.parquet(
-                os.path.join(target_root, f"days_v{state['version']}")
-            )
+            prev_days = batch_df.sparkSession.read.parquet(f"{root}/days/batch={k}")
             days = prev_days.unionByName(days).distinct()
-        seen.write.mode("overwrite").parquet(
-            os.path.join(target_root, f"seen_v{batch_id}")
-        )
-        days.write.mode("overwrite").parquet(
-            os.path.join(target_root, f"days_v{batch_id}")
-        )
-        state["version"] = batch_id
+        seen.write.mode("overwrite").parquet(f"{root}/seen/batch={batch_id}")
+        days.write.mode("overwrite").parquet(f"{root}/days/batch={batch_id}")
 
-    stream = ingest.events_file_stream(s, sf_dir, max_files_per_trigger=1, stream_dir=src)
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    seen = s.read.parquet(os.path.join(target_root, f"seen_v{state['version']}"))
-    days = s.read.parquet(os.path.join(target_root, f"days_v{state['version']}"))
+    return apply_batch
+
+
+def streaming_cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cumulative distinct users per day, maintained incrementally over
+    a 3-micro-batch stream: the foreachBatch state is (user → first-seen
+    day) plus the active-day set, merged per batch with min() semantics
+    and committed under versioned paths read back from the root, so a
+    restart on the same root resumes (the streaming_foreachbatch_upsert
+    discipline). The drained state yields
+    the per-day new/cumulative counts — which must equal the one-shot
+    batch computation over all events (shared oracle).
+
+    Scale: per batch the state is |users| + |days| rows — the bounded
+    first-seen reduction, not raw events; the merge is one keyed min.
+    """
+    from nbi_oedi_etl_spark.workload_banded import drain_event_thirds
+
+    s, root = drain_event_thirds(spark, sf_dir, _uniques_step, "fb_uniq_")
+    k = last_committed(root, "seen", math.inf, "days")
+    seen = s.read.parquet(f"{root}/seen/batch={k}")
+    days = s.read.parquet(f"{root}/days/batch={k}")
     new_per_day = seen.groupBy("fday").agg(F.count(F.lit(1)).alias("new_users"))
     from pyspark.sql import Window
 
@@ -201,56 +187,46 @@ FROM p3
 # ------------------------------------- streaming incremental EWMA
 
 
-def streaming_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The truncated-EWMA anomaly monitor fed by INCREMENTAL state: the
-    foreachBatch state is the (event_type, day) count rollup, merged
-    per micro-batch by summation (counts are distributive) under the
-    versioned exactly-once commit discipline; the drained rollup feeds
-    the identical EWMA arithmetic as the batch operator — so the result
-    must equal ``event_type_ewma_daily`` bit-for-bit (shared oracle).
-    The monitoring twin of the CDC/uniques incremental proofs.
-
-    Scale: state is the daily rollup (types × days rows), each batch
-    pays |batch| + |state| with a keyed sum merge.
-    """
-    from nbi_oedi_etl_spark.streaming import ingest
-    from nbi_oedi_etl_spark.workload_ext22 import _EWMA_W
-
-    s = ingest.scoped_streaming_session(spark)
-    from nbi_oedi_etl_spark.workload_banded import stage_sliced_thirds
-
-    src = stage_sliced_thirds(sf_dir, "events", "fb_ewma_src_")
-
-    target_root = tempfile.mkdtemp(prefix="fb_ewma_tgt_")
-    state = {"version": -1}
+def _ewma_step(root: str):
+    """``streaming_ewma_daily``'s step: sum the batch's (event_type, day)
+    counts into the last committed rollup, ``root/v/batch=<k>``."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         daily = batch_df.groupBy(
             "event_type", F.to_date("ts").alias("day")
         ).agg(F.count(F.lit(1)).alias("cnt"))
-        if state["version"] >= 0:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(target_root, f"v{state['version']}")
-            )
+        k = last_committed(root, "v", batch_id)
+        if k is not None:
+            prev = batch_df.sparkSession.read.parquet(f"{root}/v/batch={k}")
             daily = (
                 prev.unionByName(daily)
                 .groupBy("event_type", "day")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        daily.write.mode("overwrite").parquet(
-            os.path.join(target_root, f"v{batch_id}")
-        )
-        state["version"] = batch_id
+        daily.write.mode("overwrite").parquet(f"{root}/v/batch={batch_id}")
 
-    stream = ingest.events_file_stream(s, sf_dir, max_files_per_trigger=1, stream_dir=src)
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    daily = s.read.parquet(os.path.join(target_root, f"v{state['version']}"))
+    return apply_batch
+
+
+def streaming_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The truncated-EWMA anomaly monitor fed by INCREMENTAL state: the
+    foreachBatch state is the (event_type, day) count rollup, merged
+    per micro-batch by summation (counts are distributive) into the last
+    committed version, read back from the root so a restart resumes.
+    The drained rollup feeds the identical EWMA arithmetic as the batch
+    operator — so the result must equal ``event_type_ewma_daily``
+    bit-for-bit (shared oracle).
+    The monitoring twin of the CDC/uniques incremental proofs.
+
+    Scale: state is the daily rollup (types × days rows), each batch
+    pays |batch| + |state| with a keyed sum merge.
+    """
+    from nbi_oedi_etl_spark.workload_banded import drain_event_thirds
+    from nbi_oedi_etl_spark.workload_ext22 import _EWMA_W
+
+    s, root = drain_event_thirds(spark, sf_dir, _ewma_step, "fb_ewma_")
+    k = last_committed(root, "v", math.inf)
+    daily = s.read.parquet(f"{root}/v/batch={k}")
 
     # identical EWMA arithmetic as the batch operator, off drained state
     w_df = s.createDataFrame([(j, w) for j, w in _EWMA_W], "j int, w decimal(18,16)")

@@ -15,11 +15,16 @@ Reference parity: no reference analogue (§2.12 extension).
 
 from __future__ import annotations
 
+import json
+import os
+from collections.abc import Mapping
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nbi_oedi_etl_spark.operators.skew import keyed_cumsum
 from nbi_oedi_etl_spark.sources import read_table
+from nbi_oedi_etl_spark.streaming.foreach_batch import last_committed
 
 #: Fixed token budget per training sequence.
 PACK_TOKENS = 2048
@@ -434,15 +439,89 @@ FROM pw, z
 """
 
 
+def pack_batch(
+    d: DataFrame, totals: Mapping[str, int], max_rows_per_key: int | None = None
+) -> DataFrame:
+    """Pack one micro-batch ``d`` (doc_id, source, n_tokens) behind
+    ``totals``, the per-source token count of every earlier batch: the
+    batch spec's skew-dispatched ``keyed_cumsum`` plus a broadcast join
+    of ``totals`` as offsets."""
+    d = keyed_cumsum(
+        d, "source", ["doc_id"], _doc_id_bucket(), "n_tokens",
+        out_col="__within", include_current=False,
+        max_rows_per_key=max_rows_per_key,
+    )
+    if totals:
+        off = d.sparkSession.createDataFrame(
+            sorted(totals.items()), "source string, __offset long"
+        )
+        d = d.join(F.broadcast(off), "source", "left").withColumn(
+            "__offset", F.coalesce(F.col("__offset"), F.lit(0))
+        )
+    else:
+        d = d.withColumn("__offset", F.lit(0))
+    cum_before = (F.col("__offset") + F.col("__within")).cast("long")
+    return d.select(
+        "doc_id",
+        "source",
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.floor(cum_before / PACK_TOKENS).alias("seq_id"),
+        (cum_before % PACK_TOKENS).alias("offset_in_seq"),
+        (
+            F.floor((cum_before + F.col("n_tokens") - 1) / PACK_TOKENS)
+            - F.floor(cum_before / PACK_TOKENS)
+            + 1
+        ).alias("seq_span"),
+    )
+
+
+def _pack_step(root: str):
+    """``streaming_pack_sequences``'s step: pack behind the totals of the
+    last committed delta (``root/out/batch=<k>/_totals.json``), commit
+    ``root/out/batch=<id>``, then put its cumulative totals beside it
+    (driver-side JSON moved in by ``os.replace`` — no Spark job)."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        d = batch_df.where(
+            F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
+        ).select(
+            "doc_id",
+            "source",
+            F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
+        )
+        # ONE per-source aggregate feeds both the spine-dispatch bound
+        # (what keyed_cumsum's own probe job would measure) and the
+        # totals advance below.
+        stats = (
+            d.groupBy("source")
+            .agg(F.count(F.lit(1)).alias("c"), F.sum("n_tokens").alias("t"))
+            .collect()
+        )
+        k = last_committed(root, "out", batch_id)
+        totals = {}
+        if k is not None:
+            with open(f"{root}/out/batch={k}/_totals.json") as f:
+                totals = json.load(f)
+        dest = f"{root}/out/batch={batch_id}"
+        out = pack_batch(d, totals, max((r["c"] for r in stats), default=0))
+        out.write.mode("overwrite").parquet(dest)
+        for r in stats:
+            totals[r["source"]] = totals.get(r["source"], 0) + int(r["t"])
+        with open(f"{dest}/_totals.json.tmp", "w") as f:
+            json.dump(totals, f)
+        os.replace(f"{dest}/_totals.json.tmp", f"{dest}/_totals.json")
+
+    return apply_batch
+
+
 def streaming_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packing as a CDC STREAM: documents arrive in 3 deterministic
     micro-batches (batch k = doc_id % 3 == k, one file per trigger) and
     each batch continues the packed training stream from where the last
     one stopped — the state between batches is the per-source running
-    token total (a handful of longs), carried driver-side exactly like
-    the other foreachBatch accumulators and folded into each batch as a
-    broadcast join. Within a batch the cumsum is the same skew-dispatched
-    ``keyed_cumsum`` the batch spec uses.
+    token total (a handful of longs), which each delta commits beside
+    itself as a small JSON file (``_pack_step``) and the next batch
+    reads back, folded in as a broadcast join (``pack_batch``).
 
     Drained union contract: incremental packing in arrival order must
     equal ONE-SHOT packing over the corpus ordered by (batch, doc_id) —
@@ -459,85 +538,18 @@ def streaming_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovery reassembles the packed corpus, exactly like the banded /
     IVF CDC siblings append per batch and compact on a cadence
     (``tools/pack_cdc_drill.py`` measures the bounded write trajectory).
-    A replayed batch overwrites only its own partition directory from
-    the same carried totals (version bump gates the totals advance), so
-    exactly-once is preserved.
+    A replayed batch reads the totals of the last delta BEFORE it and
+    overwrites only its own partition, and a restart on the same root
+    resumes from the checkpoint with the totals it left on disk.
     """
-    import os
-    import tempfile
-
     from nbi_oedi_etl_spark.workload_banded import drain_mod3_batches
 
-    out_root = tempfile.mkdtemp(prefix="pack_stream_out_")
-    state: dict = {"totals": {}, "version": -1}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bs = batch_df.sparkSession
-        d = batch_df.where(
-            F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
-        ).select(
-            "doc_id",
-            "source",
-            F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
-        )
-        # r14 (guide §2.4): ONE per-source aggregate feeds both the
-        # spine-dispatch bound (max rows per source == what the probe
-        # job inside keyed_cumsum would have measured, so the branch
-        # choice — and therefore the plan — is unchanged) and the
-        # post-write totals advance below; before this round each batch
-        # paid two separate jobs for the same grouped scan.
-        stats = (
-            d.groupBy("source")
-            .agg(F.count(F.lit(1)).alias("c"), F.sum("n_tokens").alias("t"))
-            .collect()
-        )
-        d = keyed_cumsum(
-            d, "source", ["doc_id"], _doc_id_bucket(), "n_tokens",
-            out_col="__within", include_current=False,
-            max_rows_per_key=max((r["c"] for r in stats), default=0),
-        )
-        totals = state["totals"]
-        if totals:
-            off = bs.createDataFrame(
-                [(k, v) for k, v in sorted(totals.items())],
-                "source string, __offset long",
-            )
-            d = d.join(F.broadcast(off), "source", "left").withColumn(
-                "__offset", F.coalesce(F.col("__offset"), F.lit(0))
-            )
-        else:
-            d = d.withColumn("__offset", F.lit(0))
-        cum_before = (F.col("__offset") + F.col("__within")).cast("long")
-        out = d.select(
-            "doc_id",
-            "source",
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            F.floor(cum_before / PACK_TOKENS).alias("seq_id"),
-            (cum_before % PACK_TOKENS).alias("offset_in_seq"),
-            (
-                F.floor((cum_before + F.col("n_tokens") - 1) / PACK_TOKENS)
-                - F.floor(cum_before / PACK_TOKENS)
-                + 1
-            ).alias("seq_span"),
-        )
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"batch={batch_id}")
-        )
-        # advance the per-source totals AFTER the write commits
-        # (exactly-once versioned discipline: a replayed batch recomputes
-        # from the same state because totals only move on version bump —
-        # the sums were computed up front in `stats` but are APPLIED only
-        # here, after the commit, so the discipline is unchanged)
-        for r in stats:
-            totals[r["source"]] = totals.get(r["source"], 0) + int(r["t"])
-        state["version"] = batch_id
-
-    s = drain_mod3_batches(
-        spark, sf_dir, "documents", "doc_id", apply_batch, "pack_stream_src_"
+    s, root = drain_mod3_batches(
+        spark, sf_dir, "documents", "doc_id", _pack_step, "pack_stream_"
     )
     # union-on-read: partition discovery over batch=<id> deltas; the
     # hive partition column is drain bookkeeping, not output schema
-    return s.read.parquet(out_root).select(
+    return s.read.parquet(f"{root}/out").select(
         "doc_id", "source", "n_tokens", "seq_id", "offset_in_seq", "seq_span"
     )
 

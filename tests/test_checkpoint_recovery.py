@@ -14,6 +14,7 @@ replay rewrites identical bytes wherever the crash landed.
 
 from __future__ import annotations
 
+import math
 import pathlib
 
 import pyarrow as pa
@@ -239,3 +240,121 @@ def test_partitioned_overwrite_sink_idempotent_across_restart(spark, tmp_path):
     assert df.count() == 40
     assert sorted(r["v"] for r in df.select("v").distinct().collect()) == [0, 1, 2, 3]
     assert df.groupBy("v").count().where(F.col("count") != 10).count() == 0
+
+
+# ------------------------------------------- restart drills of the specs
+# Each foreachBatch spec's step keeps its state under its root, never in
+# its closure. The drill crashes a drain right after batch 1 of 3 has
+# committed its outputs, builds the step again from nothing and resumes
+# on the same root: the state it ends with must equal an uninterrupted
+# run's. A step that kept its state in a closure dict restarts from
+# empty state and fails here.
+
+
+def restart_drill(stream, tmp_path, make_step, read):
+    """Uninterrupted run vs crash-after-batch-1 + resume; returns the
+    uninterrupted run's sorted ``read(root)`` rows."""
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    foreach_batch.run_batches(stream, clean, make_step(clean))
+    step = make_step(crashed)
+
+    def crash_after_batch_1(batch_df, batch_id):
+        step(batch_df, batch_id)
+        if batch_id == 1:
+            raise RuntimeError("injected crash after batch 1")
+
+    with pytest.raises(Exception, match="injected crash"):
+        foreach_batch.run_batches(stream, crashed, crash_after_batch_1)
+    foreach_batch.run_batches(stream, crashed, make_step(crashed))
+    want = sorted(read(clean))
+    assert want and sorted(read(crashed)) == want
+    return want
+
+
+def _write_table(tmp_path: pathlib.Path, name: str, table: pa.Table) -> str:
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir(exist_ok=True)
+    pq.write_table(table, sf_dir / f"{name}.parquet")
+    return str(sf_dir)
+
+
+@pytest.fixture
+def events(spark, tmp_path):
+    """(session, 3-slice events stream): 9 events over 3 days, one slice
+    per trigger. User 7 shows up only in batch 0, so a step that forgets
+    batch 0 on restart loses it."""
+    import datetime as dt
+
+    from nbi_oedi_etl_spark.streaming import ingest
+    from nbi_oedi_etl_spark.workload_banded import stage_sliced_thirds
+
+    t0 = dt.datetime(2024, 1, 1)
+    sf_dir = _write_table(tmp_path, "events", pa.table({
+        "event_id": pa.array(range(9), pa.int64()),
+        "ts": pa.array([t0 + dt.timedelta(hours=7 * i) for i in range(9)], pa.timestamp("us")),
+        "user_id": pa.array([7, 0, 1, 2, 3, 0, 1, 2, 3], pa.int64()),
+        "event_type": [("view", "click", "purchase")[i % 3] for i in range(9)],
+        "value": [float(i) for i in range(9)],
+        "props": ["{}"] * 9,
+    }))
+    s = ingest.scoped_streaming_session(spark)
+    src = stage_sliced_thirds(sf_dir, "events")
+    return s, ingest.events_file_stream(s, sf_dir, max_files_per_trigger=1, stream_dir=src)
+
+
+def _last_version(s, root: str, name: str) -> list[tuple]:
+    k = foreach_batch.last_committed(root, name, math.inf)
+    return [tuple(r) for r in s.read.parquet(f"{root}/{name}/batch={k}").collect()]
+
+
+def test_event_states_resume_from_their_root(events, tmp_path):
+    """The upsert, unique-users and EWMA steps, each under its own
+    sub-root, drilled as one step (one set of drains for all three)."""
+    from nbi_oedi_etl_spark.workload_ext19 import _upsert_step
+    from nbi_oedi_etl_spark.workload_ext32 import _ewma_step, _uniques_step
+
+    s, stream = events
+    makers = {"upsert": _upsert_step, "uniques": _uniques_step, "ewma": _ewma_step}
+
+    def make_step(root):
+        steps = [make(f"{root}/{name}") for name, make in makers.items()]
+
+        def step(batch_df, batch_id):
+            for one in steps:
+                one(batch_df, batch_id)
+
+        return step
+
+    def read(root):
+        return (
+            [("upsert", *t) for t in _last_version(s, f"{root}/upsert", "v")]
+            + [("seen", *t) for t in _last_version(s, f"{root}/uniques", "seen")]
+            + [("days", None, *t) for t in _last_version(s, f"{root}/uniques", "days")]
+            + [("ewma", *t) for t in _last_version(s, f"{root}/ewma", "v")]
+        )
+
+    rows = restart_drill(stream, tmp_path, make_step, read)
+    assert [r[1] for r in rows if r[0] == "upsert"] == [0, 1, 2, 3, 7]  # latest per user
+    assert sum(r[3] for r in rows if r[0] == "ewma") == 9  # each event counted once
+
+
+def test_pack_totals_resume_from_their_root(spark, tmp_path):
+    from nbi_oedi_etl_spark.workload_banded import _stage_mod3_split
+    from nbi_oedi_etl_spark.workload_ext34 import _pack_step
+
+    sf_dir = _write_table(tmp_path, "documents", pa.table({
+        "doc_id": pa.array(range(9), pa.int64()),
+        "text": [" ".join(["w"] * (300 * i + 1)) for i in range(9)],
+        "source": [("web", "code")[i % 2] for i in range(9)],
+    }))
+    s = spark.newSession()
+    stream = (
+        s.readStream.schema("doc_id long, text string, source string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(_stage_mod3_split(sf_dir, "documents", "doc_id"))
+    )
+    rows = restart_drill(
+        stream, tmp_path, _pack_step,
+        lambda r: [tuple(x) for x in s.read.parquet(f"{r}/out").collect()],
+    )
+    assert len(rows) == 9 and max(r[3] for r in rows) > 0  # sequences cut

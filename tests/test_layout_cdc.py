@@ -1,9 +1,10 @@
 """Commit semantics of ``workload_banded.drain_layout_cdc``, the one
 micro-batch driver behind the banded and IVF CDC streams: empty deltas
 carry the output schema, the result sink and the layout append are both
-joined before a batch's failure surfaces, and an unfitted layout defers
-fitting to the next batch. Driven with fake ``fit``/``step`` callables
-over a tiny ``documents.parquet`` (batch k = doc_id % 3 == k)."""
+joined before a batch's failure surfaces, an unfitted layout (no
+sidecar) defers fitting to the next batch, and a restart on the same
+root resumes fitted. Driven with fake ``fit``/``step`` callables over a
+tiny ``documents.parquet`` (batch k = doc_id % 3 == k)."""
 
 from __future__ import annotations
 
@@ -16,7 +17,9 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from nbi_oedi_etl_spark import workload_banded as wb
 from nbi_oedi_etl_spark.workload_banded import drain_layout_cdc
+from tests.test_checkpoint_recovery import restart_drill
 
 OUT_SCHEMA = "doc_id_new long, doc_id_corpus long"
 
@@ -44,8 +47,8 @@ def corpus(tmp_path, monkeypatch):
 
 
 def _deltas(root) -> dict[int, str]:
-    (out_root,) = [p for p in os.listdir(root) if p.startswith("cdc_test_out_")]
-    base = os.path.join(root, out_root)
+    (run_root,) = [p for p in os.listdir(root) if p.startswith("cdc_test_")]
+    base = os.path.join(root, run_root, "out")
     return {
         int(d.split("=")[1]): os.path.join(base, d)
         for d in os.listdir(base)
@@ -57,12 +60,18 @@ def _ids(batch) -> list[int]:
     return sorted(r["doc_id"] for r in batch.select("doc_id").collect())
 
 
+def _fit(bs, batch, layout) -> None:
+    """A fake fit: writing a sidecar is what marks the layout fitted."""
+    os.makedirs(layout, exist_ok=True)
+    open(os.path.join(layout, "_test_meta.json"), "w").close()
+
+
 def test_none_step_writes_one_schema_bearing_empty_delta(spark, corpus):
     root, write = corpus
     sf_dir = write(list(range(9)))
     df = drain_layout_cdc(
         spark, sf_dir, "documents", "doc_id", "cdc_test_", OUT_SCHEMA,
-        lambda bs, batch, layout: True,
+        _fit,
         lambda bs, batch, layout: None,
     )
     assert df.columns == ["doc_id_new", "doc_id_corpus"]
@@ -99,7 +108,7 @@ def test_failed_append_fails_drain_after_joining_sink(spark, corpus):
     with pytest.raises(Exception, match="append leg failed"):
         drain_layout_cdc(
             spark, sf_dir, "documents", "doc_id", "cdc_test_", OUT_SCHEMA,
-            lambda bs, batch, layout: True, step,
+            _fit, step,
         )
     # the sink leg of the failed batch finished before the failure
     # surfaced: its delta is committed, not half-written
@@ -116,7 +125,8 @@ def test_unfitted_empty_first_batch_defers_fit(spark, corpus):
     def fit(bs, batch, layout):
         ids = _ids(batch)
         fits.append(ids)
-        return bool(ids)
+        if ids:
+            _fit(bs, batch, layout)
 
     def step(bs, batch, layout):
         ids = _ids(batch)
@@ -131,3 +141,26 @@ def test_unfitted_empty_first_batch_defers_fit(spark, corpus):
     assert steps == [[2, 5, 8, 11]]
     assert sorted(r["doc_id_new"] for r in rows) == [2, 5, 8, 11]
     assert sorted(_deltas(root)) == [0, 1, 2]
+
+
+def test_restart_resumes_fitted_from_the_sidecar(spark, corpus, tmp_path):
+    """Crash after batch 1 of 3, rebuild the step from nothing, resume on
+    the same root: the sidecar (not a flag in memory) says the layout is
+    fitted, so the replayed batch steps instead of fitting again."""
+    _, write = corpus
+    sf_dir = write(list(range(9)))
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(wb._stage_mod3_split(sf_dir, "documents", "doc_id"))
+    )
+
+    def step(bs, batch, layout):
+        return bs.createDataFrame([(i, -1) for i in _ids(batch)], OUT_SCHEMA), lambda: None
+
+    rows = restart_drill(
+        stream, tmp_path,
+        lambda root: wb._layout_cdc_step(root, OUT_SCHEMA, _fit, step),
+        lambda root: [tuple(r) for r in spark.read.parquet(f"{root}/out").collect()],
+    )
+    assert [r[0] for r in rows] == [1, 2, 4, 5, 7, 8]

@@ -146,15 +146,15 @@ def test_stage_mod3_split_restages_after_partial_sweep(tmp_path):
     from nbi_oedi_etl_spark import workload_banded as wb
 
     _write_tiny_table(str(tmp_path / "documents.parquet"))
-    src = wb._stage_mod3_split(str(tmp_path), "documents", "doc_id", "t_")
+    src = wb._stage_mod3_split(str(tmp_path), "documents", "doc_id")
     assert wb._staged_dir_intact(src)
     # plant the partial sweep: part2 survives, part0/part1 swept
     os.remove(os.path.join(src, "part0.parquet"))
     os.remove(os.path.join(src, "part1.parquet"))
-    src2 = wb._stage_mod3_split(str(tmp_path), "documents", "doc_id", "t_")
+    src2 = wb._stage_mod3_split(str(tmp_path), "documents", "doc_id")
     assert src2 != src and wb._staged_dir_intact(src2)
     # fully-intact dir is reused (memo hit, no re-stage)
-    assert wb._stage_mod3_split(str(tmp_path), "documents", "doc_id", "t_") == src2
+    assert wb._stage_mod3_split(str(tmp_path), "documents", "doc_id") == src2
 
 
 def test_stage_sliced_thirds_restages_after_partial_sweep(tmp_path):
@@ -163,12 +163,12 @@ def test_stage_sliced_thirds_restages_after_partial_sweep(tmp_path):
     from nbi_oedi_etl_spark import workload_banded as wb
 
     _write_tiny_table(str(tmp_path / "events.parquet"))
-    src = wb.stage_sliced_thirds(str(tmp_path), "events", "t_")
+    src = wb.stage_sliced_thirds(str(tmp_path), "events")
     assert wb._staged_dir_intact(src)
     os.remove(os.path.join(src, "part1.parquet"))
-    src2 = wb.stage_sliced_thirds(str(tmp_path), "events", "t_")
+    src2 = wb.stage_sliced_thirds(str(tmp_path), "events")
     assert src2 != src and wb._staged_dir_intact(src2)
-    assert wb.stage_sliced_thirds(str(tmp_path), "events", "t_") == src2
+    assert wb.stage_sliced_thirds(str(tmp_path), "events") == src2
 
 
 def test_stage_population_is_lock_guarded(tmp_path):
@@ -182,7 +182,7 @@ def test_stage_population_is_lock_guarded(tmp_path):
     with cf.ThreadPoolExecutor(max_workers=8) as ex:
         dirs = list(
             ex.map(
-                lambda _: wb.stage_sliced_thirds(str(tmp_path), "embeddings", "t_"),
+                lambda _: wb.stage_sliced_thirds(str(tmp_path), "embeddings"),
                 range(8),
             )
         )

@@ -15,7 +15,10 @@ specs demand a window slot before the round can ship.
 
 from __future__ import annotations
 
+import json
 import pathlib
+import shutil
+import subprocess
 import sys
 
 import pytest
@@ -107,3 +110,34 @@ def test_digests_ignore_memo_cache_warmth():
         for m in memos:
             m.drop(lambda key: key == (probe,))
     assert digests_cold == digests_warm
+
+
+def test_spec_digests_ignore_where_the_checkout_sits(tmp_path):
+    """Two copies of the package, each digested through the RELATIVE root
+    ``Path(".")`` in its own process, must agree on every spec: ``rel()``
+    once fell back to absolute paths for a relative root, so every spec
+    read as moved between two checkouts."""
+    script = (
+        "import json, pathlib, sys; sys.path[:0] = ['.', sys.argv[1]]; "
+        "import rotation_audit; "
+        "print(json.dumps(rotation_audit.spec_digests(pathlib.Path('.'))))"
+    )
+    procs = []
+    for name in ("a", "b"):  # the two digests run side by side
+        copy = tmp_path / name
+        shutil.copytree(
+            _REPO / "nbi_oedi_etl_spark", copy / "nbi_oedi_etl_spark",
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+        procs.append(subprocess.Popen(
+            [sys.executable, "-c", script, str(_REPO / "tools")],
+            cwd=copy, stdout=subprocess.PIPE, text=True,
+        ))
+    digests = []
+    for p in procs:
+        out, _ = p.communicate(timeout=600)
+        assert p.returncode == 0
+        digests.append(json.loads(out.splitlines()[-1]))
+    assert len(digests[0]) == len(workload.SPECS)
+    moved = sorted(n for n, d in digests[0].items() if digests[1].get(n) != d)
+    assert moved == []

@@ -8,7 +8,8 @@ hive-partitioned ``batch=<id>`` delta and reassembles via
 partition-discovery union-on-read, exactly the discipline the banded /
 IVF CDC layouts already follow (``tools/banded_cdc_drill.py``).
 
-This drill runs the SAME per-batch packing body over ``--batches`` N
+This drill runs the SAME per-batch packing body
+(``workload_ext34.pack_batch``) over ``--batches`` N
 deterministic slices (``doc_id % N``) at fact scale and measures the
 per-batch write trajectory for both strategies:
 
@@ -76,8 +77,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from nbi_oedi_etl_spark import get_spark
-    from nbi_oedi_etl_spark.operators.skew import keyed_cumsum
-    from nbi_oedi_etl_spark.workload_ext34 import PACK_TOKENS, _doc_id_bucket
+    from nbi_oedi_etl_spark.workload_ext34 import PACK_TOKENS, pack_batch
 
     spark = get_spark(app_name="pack-cdc-drill")
     spark.sparkContext.setLogLevel("ERROR")
@@ -93,35 +93,6 @@ def main() -> int:
         )
         .localCheckpoint(eager=True)
     )
-
-    def pack_batch(batch_df, totals):
-        d = keyed_cumsum(
-            batch_df, "source", ["doc_id"], _doc_id_bucket(), "n_tokens",
-            out_col="__within", include_current=False,
-        )
-        if totals:
-            off = spark.createDataFrame(
-                [(k, v) for k, v in sorted(totals.items())],
-                "source string, __offset long",
-            )
-            d = d.join(F.broadcast(off), "source", "left").withColumn(
-                "__offset", F.coalesce(F.col("__offset"), F.lit(0))
-            )
-        else:
-            d = d.withColumn("__offset", F.lit(0))
-        cum_before = (F.col("__offset") + F.col("__within")).cast("long")
-        return d.select(
-            "doc_id",
-            "source",
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            F.floor(cum_before / PACK_TOKENS).alias("seq_id"),
-            (cum_before % PACK_TOKENS).alias("offset_in_seq"),
-            (
-                F.floor((cum_before + F.col("n_tokens") - 1) / PACK_TOKENS)
-                - F.floor(cum_before / PACK_TOKENS)
-                + 1
-            ).alias("seq_span"),
-        )
 
     out_cols = ["doc_id", "source", "n_tokens", "seq_id", "offset_in_seq", "seq_span"]
 

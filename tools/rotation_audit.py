@@ -356,6 +356,10 @@ def spec_digests(root: pathlib.Path) -> dict[str, str]:
     from nbi_oedi_etl_spark import workload
 
     _ModuleIndex._cache.clear()
+    # rel() compares against resolved paths: a relative root would make
+    # every path fall back to absolute, and digests depend on where the
+    # checkout sits
+    root = root.resolve()
 
     def rel(path: str) -> str:
         p = pathlib.Path(path).resolve()
