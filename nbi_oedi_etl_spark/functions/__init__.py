@@ -1,8 +1,8 @@
 from nbi_oedi_etl_spark.functions.scalars import (
     dotted,
-    floor_to_hour,
     key_fingerprint,
+    quoted,
     upgrade_str,
 )
 
-__all__ = ["dotted", "floor_to_hour", "key_fingerprint", "upgrade_str"]
+__all__ = ["dotted", "key_fingerprint", "quoted", "upgrade_str"]

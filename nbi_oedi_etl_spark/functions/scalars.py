@@ -22,16 +22,11 @@ def dotted(name: str) -> Column:
     return F.col(f"`{name}`")
 
 
-def floor_to_hour(ts: Column | str) -> Column:
-    """Floor a timestamp to the hour.
-
-    Equivalent of the reference's epoch-ms integer division
-    ``ts*1000 // 3_600_000 * 3_600_000`` (transform.py:23-46) — identical to
-    ``date_trunc('hour', ts)`` for UTC sessions, but vectorized instead of
-    the reference's per-row Python loop.
-    """
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.date_trunc("hour", c)
+def quoted(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled), for names spliced into SQL text: dotted OEDI names must not
+    parse as struct access (see ``dotted``)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def upgrade_str(code: Column | str) -> Column:

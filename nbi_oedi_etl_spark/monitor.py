@@ -30,5 +30,13 @@ class StageCounters:
         return df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
     def summary(self) -> dict[str, int]:
-        """Counter snapshot (call after the consuming action has run)."""
-        return {name: obs.get["rows"] for name, obs in self._observations.items()}
+        """Counter snapshot (call after the consuming action has run).
+
+        A counter whose plan ran no task — a scan that pruned every
+        partition — reads 0: its observation comes back as an empty row,
+        which ``Observation.get`` cannot convert."""
+        out = {}
+        for name, obs in self._observations.items():
+            row = obs._jo.getRow()
+            out[name] = row.getLong(0) if row.length() else 0
+        return out

@@ -10,17 +10,45 @@ README.md:370-372). In Spark the equivalent is explicit and deterministic:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
+
+from nbi_oedi_etl_spark.functions.scalars import quoted
 
 
 def register_parquet_table(
-    spark: SparkSession, name: str, location: str, recover_partitions: bool = True
+    spark: SparkSession,
+    name: str,
+    location: str,
+    recover_partitions: bool = True,
+    schema: StructType | None = None,
+    partition_by: Sequence[str] = (),
 ) -> None:
-    """Register an external parquet table over ``location`` (schema inferred)."""
+    """Register an external parquet table over ``location``.
+
+    With no ``schema`` the table's schema (and its partition columns) are
+    inferred from the files, a Spark job over their footers. A caller that
+    just wrote the files passes the ``schema`` it wrote and the
+    ``partition_by`` columns it wrote with: the table is then declared,
+    partition columns last as inference orders them, and no file is read —
+    an empty location (only ``_SUCCESS``) registers as an empty table
+    instead of failing to infer."""
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(f"CREATE TABLE {name} USING PARQUET LOCATION '{location}'")
-    if recover_partitions:
+    if schema is None:
+        spark.sql(f"CREATE TABLE {name} USING PARQUET LOCATION '{location}'")
+    else:
+        cols = [f for f in schema.fields if f.name not in partition_by]
+        cols += [schema[c] for c in partition_by]
+        parts = ", ".join(quoted(c) for c in partition_by)
+        spark.sql(
+            f"CREATE TABLE {name} ({StructType(cols).toDDL()}) USING PARQUET "
+            + (f"PARTITIONED BY ({parts}) " if parts else "")
+            + f"LOCATION '{location}'"
+        )
+    if recover_partitions and (schema is None or partition_by):
         try:
             spark.catalog.recoverPartitions(name)
         except AnalysisException:

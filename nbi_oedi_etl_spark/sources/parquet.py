@@ -21,6 +21,7 @@ from collections.abc import Iterable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from nbi_oedi_etl_spark.memo import Memo, file_key
 
@@ -94,6 +95,15 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return raw
     return raw
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The inferred schema of the parquet files at ``path``, memoized in
+    ``_TABLE_SCHEMA_MEMO`` under their file-set key: a hit declares the
+    schema without the footer-inference job, and any rewrite, add or
+    delete of a file at ``path`` re-infers. A partitioned root is keyed on
+    its top-level entries only, so pass a flat directory or a file."""
+    return _TABLE_SCHEMA_MEMO.get(file_key(path), lambda: spark.read.parquet(path).schema)
 
 
 def load_tables(

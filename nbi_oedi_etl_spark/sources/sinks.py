@@ -29,7 +29,13 @@ def write_parquet(
     partition_by: Sequence[str] = (),
     mode: str = "error",
 ) -> None:
-    """Write a DataFrame as (optionally hive-partitioned) snappy parquet."""
+    """Write a DataFrame as (optionally hive-partitioned) snappy parquet.
+
+    The repartition by ``partition_by`` costs no shuffle when ``df``
+    already hash-partitions on those columns at the session's partition
+    count (``df.repartition(*partition_by)`` upstream, kept through
+    narrow operators and aggregates grouped by a superset): Spark's
+    EnsureRequirements elides a semantically equal repartition."""
     if partition_by:
         # Co-locate rows of the same output partition to avoid the P×T
         # small-file explosion at scale.

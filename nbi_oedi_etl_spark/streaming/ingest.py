@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from nbi_oedi_etl_spark.memo import file_key
 from nbi_oedi_etl_spark.sources import parquet
 
 
@@ -67,10 +66,7 @@ def table_schema(spark: SparkSession, sf_dir: str, table: str):
     Spark 4.1 infers ``ts`` identically either way). Profiled r15: every
     drain otherwise paid a ~0.12 s footer-inference job for an immutable
     testdata schema."""
-    path = f"{sf_dir}/{table}.parquet"
-    return parquet._TABLE_SCHEMA_MEMO.get(
-        file_key(path), lambda: spark.read.parquet(path).schema
-    )
+    return parquet.parquet_schema(spark, f"{sf_dir}/{table}.parquet")
 
 
 def table_file_stream(

@@ -19,9 +19,12 @@ Reference parity: no reference analogue (§2.12 extension, scale path).
 
 from __future__ import annotations
 
+import atexit
 import glob
 import os
+import shutil
 import tempfile
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +43,23 @@ from nbi_oedi_etl_spark.streaming.foreach_batch import run_batches
 
 #: 4 bands × 2 signature slots — the banding of _portable_minhash_pairs.
 _BANDS = 4
+
+
+#: The one parent of this process's drain roots and staged splits, made
+#: on first use and removed at interpreter exit: a spec returns a lazy
+#: read of its drain root, so no call can remove its own.
+_drain_parent: str | None = None
+_drain_lock = threading.Lock()
+
+
+def _drain_dir(prefix: str) -> str:
+    """A fresh directory under this process's drain parent."""
+    global _drain_parent
+    with _drain_lock:
+        if _drain_parent is None or not os.path.isdir(_drain_parent):
+            _drain_parent = tempfile.mkdtemp(prefix="nbi_drains_")
+            atexit.register(shutil.rmtree, _drain_parent, True)
+        return tempfile.mkdtemp(prefix=prefix, dir=_drain_parent)
 
 
 #: staged mod-3 splits, keyed by the source table's path, id_col and file
@@ -74,7 +94,7 @@ def _stage_mod3_split(sf_dir: str, table: str, id_col: str) -> str:
         return pc.subtract(col, pc.multiply(pc.divide(col, 3), 3))
 
     def build() -> str:
-        src = tempfile.mkdtemp(prefix="mod3_src_")
+        src = _drain_dir("mod3_src_")
         t = pq.read_table(f"{sf_dir}/{table}.parquet")
         for k in range(3):
             path = os.path.join(src, f"part{k}.parquet")
@@ -105,7 +125,7 @@ def stage_sliced_thirds(sf_dir: str, table: str) -> str:
     import pyarrow.parquet as pq
 
     def build() -> str:
-        src = tempfile.mkdtemp(prefix="thirds_src_")
+        src = _drain_dir("thirds_src_")
         t = pq.read_table(f"{sf_dir}/{table}.parquet")
         n = t.num_rows
         cuts = [0, n // 3, 2 * n // 3, n]
@@ -129,7 +149,7 @@ def drain_event_thirds(spark, sf_dir: str, make_step, prefix: str):
     s = ingest.scoped_streaming_session(spark)
     src = stage_sliced_thirds(sf_dir, "events")
     stream = ingest.events_file_stream(s, sf_dir, max_files_per_trigger=1, stream_dir=src)
-    root = tempfile.mkdtemp(prefix=prefix)
+    root = _drain_dir(prefix)
     run_batches(stream, root, make_step(root))
     return s, root
 
@@ -148,7 +168,7 @@ def drain_mod3_batches(spark, sf_dir: str, table: str, id_col: str, make_step, p
         .option("maxFilesPerTrigger", 1)
         .parquet(_stage_mod3_split(sf_dir, table, id_col))
     )
-    root = tempfile.mkdtemp(prefix=prefix)
+    root = _drain_dir(prefix)
     run_batches(stream, root, make_step(root))
     return s, root
 

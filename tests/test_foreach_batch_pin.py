@@ -89,3 +89,26 @@ def test_closure_scan_sees_a_nested_dict():
 
     (cell,) = _mutable_cells(make_step("r"))
     assert cell.endswith("make_step.<locals>.bump:state")
+
+
+def test_drain_dirs_share_one_parent_removed_at_exit(monkeypatch):
+    """Every drain root and staged split lands under one per-process
+    parent in the OS temp dir, and the handler registered at exit
+    removes it (before, each call left its own mkdtemp behind)."""
+    import os
+    import tempfile
+
+    handlers = []
+    monkeypatch.setattr(workload_banded, "_drain_parent", None)
+    monkeypatch.setattr(
+        workload_banded.atexit, "register", lambda fn, *args: handlers.append((fn, args))
+    )
+    a = workload_banded._drain_dir("a_")
+    b = workload_banded._drain_dir("b_")
+    parent = os.path.dirname(a)
+    assert os.path.dirname(b) == parent and a != b
+    assert os.path.dirname(parent) == tempfile.gettempdir()
+    assert os.path.basename(a).startswith("a_")
+    (fn, args), = handlers  # one parent, one handler
+    fn(*args)
+    assert not os.path.exists(parent)

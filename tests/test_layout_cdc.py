@@ -32,6 +32,7 @@ def corpus(tmp_path, monkeypatch):
     root = tmp_path / "tmp"
     root.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(root))
+    monkeypatch.setattr(wb, "_drain_parent", str(root))
 
     def write(ids):
         pq.write_table(

@@ -95,6 +95,121 @@ def test_pipeline_prunes_partitions(spark, ts_fixture):
     assert "state" in pf and "upgrade" in pf, f"no partition filters in scan: {pf!r}"
 
 
+# The tests below put their metadata under ``_meta`` (skipped by partition
+# discovery) and run before test_metadata_bypass, whose ``metadata`` dir
+# in the shared fixture root conflicts with the hive layout.
+
+
+@pytest.fixture(scope="module")
+def ts_meta(ts_fixture):
+    """A dimension table beside ts_fixture's partitions: dotted names and
+    a TIMESTAMP_NTZ column, like the reference's building metadata."""
+    import os
+
+    os.makedirs(f"{ts_fixture}/_meta", exist_ok=True)
+    pd.DataFrame(
+        {
+            "bldg_id": [100, 200],
+            "in.state": ["AK", "AK"],
+            "in.built": pd.to_datetime(["1990-01-01", "2005-06-01"]).astype("datetime64[us]"),
+        }
+    ).to_parquet(f"{ts_fixture}/_meta/meta.parquet", index=False)
+    return "_meta"
+
+
+def _one_state_config(ts_fixture, dest, state="AK") -> ETLConfig:
+    return ETLConfig(
+        src_path=ts_fixture,
+        dest_path=str(dest),
+        job_specific=[JobSpec(release_year="2024", release_name="test", state=state, upgrades=[0, 1])],
+    )
+
+
+def _jobs_submitted(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _sorted_rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_pipeline_op_runs_four_spark_jobs(spark, ts_fixture, ts_meta, tmp_path):
+    """One JobSpec with metadata bypass and registration submits at most
+    4 Spark jobs with a warm schema memo (source inference, the write's
+    map and result stages, the metadata rewrite); it submitted 11 when
+    rows_out was a re-read count and the tables were inferred."""
+    config = _one_state_config(ts_fixture, tmp_path / "dest")
+    run_pipeline(spark, config, metadata_subpath=ts_meta)  # warms the schema memo
+    j0 = _jobs_submitted(spark)
+    (res,) = run_pipeline(
+        spark, config, metadata_subpath=ts_meta, register_tables=True, table_prefix="pin"
+    )
+    jobs = _jobs_submitted(spark) - j0
+    assert jobs <= 4, f"{jobs} Spark jobs for one op"
+    assert res.rows_out == spark.read.parquet(res.output_path).count() == 2 * 2 * 8
+    assert res.counters == {"rows_listed": 2 * 2 * 32, "rows_out": 2 * 2 * 8}
+
+
+def test_declared_tables_match_inference(spark, ts_fixture, ts_meta, tmp_path):
+    """The tables run_pipeline declares from the written schema read
+    exactly like the same locations registered by schema inference."""
+    from nbi_oedi_etl_spark.sources.catalog import register_parquet_table
+
+    config = _one_state_config(ts_fixture, tmp_path / "dest")
+    (res,) = run_pipeline(
+        spark, config, metadata_subpath=ts_meta, register_tables=True, table_prefix="decl"
+    )
+    meta_dest = f"{res.output_path.rsplit('/', 1)[0]}/{ts_meta}"
+    for declared, location in [("decl_state_ak", res.output_path), ("decl_parquet", meta_dest)]:
+        register_parquet_table(spark, "inferred", location)
+        assert spark.table(declared).schema == spark.table("inferred").schema
+        assert _sorted_rows(spark.table(declared)) == _sorted_rows(spark.table("inferred"))
+        if declared == "decl_state_ak":
+            assert _sorted_rows(spark.sql(f"SHOW PARTITIONS {declared}")) == _sorted_rows(
+                spark.sql("SHOW PARTITIONS inferred")
+            ) == [("upgrade=0/state=AK",), ("upgrade=1/state=AK",)]
+    spark.sql("DROP TABLE inferred")
+    schema = spark.table("decl_state_ak").schema
+    assert schema["timestamp_min"].dataType.typeName() == "timestamp_ntz"
+    assert schema["upgrade"].dataType.typeName() == "integer"
+    assert spark.table("decl_parquet").schema["in.built"].dataType.typeName() == "timestamp_ntz"
+
+
+def test_job_matching_no_partition_registers_empty_table(spark, ts_fixture, tmp_path):
+    """A JobSpec whose state has no partition writes only ``_SUCCESS``:
+    the op returns 0 rows in and out and registers an empty table under
+    the declared schema (inferring it from the empty location failed)."""
+    config = _one_state_config(ts_fixture, tmp_path / "dest", state="ZZ")
+    (res,) = run_pipeline(spark, config, register_tables=True, table_prefix="empty")
+    assert res.rows_in == res.rows_out == 0
+    table = spark.table("empty_state_zz")
+    assert table.count() == 0
+    assert table.columns[-2:] == ["upgrade", "state"]
+    assert [f"{m}_mean" for m in MEASURES] == table.columns[2:5]
+
+
+def test_bypass_registers_rewritten_metadata_schema(spark, tmp_path):
+    """Stale metadata: a metadata parquet rewritten with one more column
+    between two runs in one session shows that column in the second
+    registered table (the bypass's schema memo is keyed on the files,
+    not the path)."""
+    src = tmp_path / "src"
+    (src / "_meta").mkdir(parents=True)
+    meta = src / "_meta" / "meta.parquet"
+    config = ETLConfig(src_path=str(src), dest_path=str(tmp_path / "dest"))
+    pd.DataFrame({"bldg_id": [1, 2], "in.state": ["AK", "CA"]}).to_parquet(meta, index=False)
+    run_pipeline(spark, config, metadata_subpath="_meta", register_tables=True, table_prefix="stale")
+    assert spark.table("stale_parquet").columns == ["bldg_id", "in.state"]
+
+    pd.DataFrame(
+        {"bldg_id": [1, 2], "in.sqft": [10.0, 20.0], "in.state": ["AK", "CA"]}
+    ).to_parquet(meta, index=False)
+    run_pipeline(spark, config, metadata_subpath="_meta", register_tables=True, table_prefix="stale")
+    table = spark.table("stale_parquet")
+    assert table.columns == ["bldg_id", "in.sqft", "in.state"]
+    assert _sorted_rows(table) == [(1, 10.0, "AK"), (2, 20.0, "CA")]
+
+
 def test_metadata_bypass(spark, ts_fixture, tmp_path):
     """S6: dimension data copied through unmodified (fetch.py:161-196)."""
     import os
